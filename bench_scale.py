@@ -142,7 +142,7 @@ QUERIES: tuple[str, ...] = (
     "x49_span_dedup_rewrite",
     "x50_pq_topk",
     # the stored-index read path split out of x50: the index BUILD is
-    # an eager side effect behind a /tmp marker, pre-warmed before the
+    # an eager side effect cached under /tmp, pre-warmed before the
     # section's timed loop (prewarm_stored_indexes), so the timed
     # region is the pure query — scan of the stored m-int codes vs
     # x50's full in-query re-train+scan
@@ -865,8 +865,8 @@ def main() -> None:
             # before this fix.  bench.py has always timed construction;
             # this aligns the two harnesses.  The stored-index twins'
             # build-once side effects stay amortized by best-of-2: the
-            # /tmp marker exists by sample 2, whose construction is the
-            # pure read path, and min() takes it.
+            # cached /tmp index exists by sample 2, whose construction
+            # is the pure read path, and min() takes it.
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             df.select(
@@ -1123,7 +1123,7 @@ def main() -> None:
         return rows_cache[key]
 
     #: stored-index twins whose plan CONSTRUCTION builds a /tmp index
-    #: behind a marker on first touch.  With t0 above fn() (r13) that
+    #: (index_store.stored_index) on first touch.  With t0 above fn() (r13) that
     #: build would land inside the FIRST timed sample — amortized by
     #: best-of-2 normally, but a >=SINGLE_SAMPLE_CUTOFF_SEC first
     #: sample is recorded alone, which would bill the one-time build
@@ -1139,9 +1139,11 @@ def main() -> None:
         "x54b_incremental_semdedup_stored",
     )
 
-    def prewarm_stored_indexes(section_queries, sf_dirs) -> None:
+    def prewarm_stored_indexes(section, section_queries, sf_dirs) -> None:
+        # a journaled entry is never re-timed: a resumed run after a
+        # /tmp wipe must not rebuild its (2 M-vector) index for nothing
         for name in section_queries:
-            if name in stored_twins:
+            if name in stored_twins and (section, name) not in journal:
                 for d in sf_dirs:
                     REGISTRY[name].fn(spark, d)
 
@@ -1161,7 +1163,7 @@ def main() -> None:
         "scale10": section_sentinel(spark, "scale10")
     }
     out: dict[str, dict[str, float]] = {}
-    prewarm_stored_indexes(QUERIES, (BASE_DIR, SCALE_DIR))
+    prewarm_stored_indexes("scale10", QUERIES, (BASE_DIR, SCALE_DIR))
     for name in QUERIES:
         if ("scale10", name) in journal:
             out[name] = journal[("scale10", name)]
@@ -1195,7 +1197,7 @@ def main() -> None:
     spark.read.parquet(f"{dir100}/events.parquet").count()  # warm listing
     load_factors["scale100"] = section_sentinel(spark, "scale100")
     out100: dict[str, dict[str, float]] = {}
-    prewarm_stored_indexes(SCALE100_QUERIES, (BASE_DIR, dir100))
+    prewarm_stored_indexes("scale100", SCALE100_QUERIES, (BASE_DIR, dir100))
     for name in SCALE100_QUERIES:
         if ("scale100", name) in journal:
             out100[name] = journal[("scale100", name)]
@@ -1227,7 +1229,7 @@ def main() -> None:
         build_replica(BASE_DIR, dir1000, 1000, tables=SCALE1000_TABLES)
         spark.read.parquet(f"{dir1000}/events.parquet").count()
         load_factors["scale1000"] = section_sentinel(spark, "scale1000")
-        prewarm_stored_indexes(SCALE1000_QUERIES, (BASE_DIR, dir1000))
+        prewarm_stored_indexes("scale1000", SCALE1000_QUERIES, (BASE_DIR, dir1000))
         for name in SCALE1000_QUERIES:
             if ("scale1000", name) in journal:
                 out1000[name] = journal[("scale1000", name)]

@@ -85,7 +85,10 @@ def measure(spark, copies: int) -> dict:
     embedding corpus in both regimes; returns the per-scale record."""
     from pyspark.sql import functions as F
 
-    from data_engineer_project_weather_analytics_spark.operators import similarity
+    from data_engineer_project_weather_analytics_spark.operators import (
+        index_store,
+        similarity,
+    )
     from data_engineer_project_weather_analytics_spark.operators.text import (
         deterministic_split,
     )
@@ -108,14 +111,13 @@ def measure(spark, copies: int) -> dict:
     # TWO-LEVEL literal route (with_two_level_cell_assignment, ~2·√k
     # cosines per row) instead of the flat k-wide argmax that
     # dominated the r11 100x point (104.6 rows/s at k=639).
-    idx = os.path.join(WORK_DIR, f"semidx_x{copies}")
-    marker = os.path.join(idx, "_DONE")
-    if not os.path.exists(marker):
-        similarity.semdedup_index_write_auto(
-            corpus, "vec_id", "embedding", idx
-        )
-        with open(marker, "w") as fh:
-            fh.write(rep_dir)
+    idx = index_store.stored_index(
+        WORK_DIR, f"semidx_x{copies}", [f"{rep_dir}/embeddings.parquet"],
+        {"split": "train", "k": None, "two_level": True},
+        lambda d: similarity.semdedup_index_write(
+            corpus, "vec_id", "embedding", d, k=None, two_level=True
+        ),
+    )
     survivors = spark.read.parquet(f"{idx}/survivors")
     fmap_rows = [
         (r["cell"], list(r["centroid"]), r["coarse"])

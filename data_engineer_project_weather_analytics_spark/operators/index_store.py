@@ -36,6 +36,7 @@ as under append — re-centering is a rebuild, not a delete.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
@@ -50,6 +51,10 @@ BASE_META = "_base_meta.json"
 #: before the swap, so :func:`recover_rebuild` can tell a promotable
 #: staged index from a half-built one
 REBUILD_COMPLETE = "_REBUILD_COMPLETE"
+#: part of every :func:`stored_index` cache key: bump it whenever an
+#: index writer's output changes (layout, columns, values), so indexes
+#: built by older code are never served
+INDEX_FORMAT_VERSION = 1
 
 #: artifact → layout spec for each index family.
 #:
@@ -291,6 +296,40 @@ def rebuild_index(index_dir: str, build: Callable[[str], None]) -> None:
     shutil.rmtree(trash, ignore_errors=True)
     # the marker is transport state, not index state
     os.remove(os.path.join(root, REBUILD_COMPLETE))
+
+
+def stored_index(
+    root: str,
+    family: str,
+    inputs: list[str],
+    params: dict,
+    build: Callable[[str], None],
+) -> str:
+    """The build-once cache behind every stored-index query: return the
+    live index directory for ``family`` under ``root``, building it
+    with ``build(dir)`` (through :func:`rebuild_index`'s staged swap)
+    when it is missing.
+
+    The directory is keyed on what actually built it: the
+    ``(path, size, mtime_ns)`` of every input path, the build
+    ``params`` and :data:`INDEX_FORMAT_VERSION`.  A table regenerated at
+    the same path therefore gets a fresh index instead of silently
+    serving the old one, and a writer change ships with a version bump
+    instead of a hand-renamed directory.  Stale indexes are left in
+    place, never reused.  A ``build`` that raises leaves no live
+    directory (the staged residue is dropped by the next build)."""
+    stats = {p: os.stat(p) for p in inputs}
+    stamps = [(p, st.st_size, st.st_mtime_ns) for p, st in stats.items()]
+    key = json.dumps(
+        {"version": INDEX_FORMAT_VERSION, "inputs": stamps, "params": params},
+        sort_keys=True,
+    )
+    index_dir = os.path.join(
+        root, f"{family}_{hashlib.sha256(key.encode()).hexdigest()[:16]}"
+    )
+    if not os.path.isdir(index_dir):
+        rebuild_index(index_dir, build)
+    return index_dir
 
 
 def recover_rebuild(index_dir: str) -> str | None:

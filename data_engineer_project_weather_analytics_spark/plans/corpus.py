@@ -149,8 +149,8 @@ def x34_kmv_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (LAZY localCheckpoint, the r13 _pin_codebook rationale) so the
     # expensive pass plans and executes exactly once instead of 4×
     # statically / ReusedExchange-dependent at runtime — lazily, so
-    # the pass rides the consuming action (no separate pin job, and
-    # the work stays inside any harness's timed region)
+    # no separate pin job runs; the upstream shingle pass still runs
+    # at construction under AQE, so harnesses must time construction
     sk = (
         hv.select("source", "h", F.row_number().over(rn).alias("__r"))
         .filter(F.col("__r") <= _KMV_K)

@@ -13,7 +13,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_engineer_project_weather_analytics_spark.operators import dedup, multimodal, similarity, text
+from data_engineer_project_weather_analytics_spark.operators import (
+    dedup,
+    index_store,
+    multimodal,
+    similarity,
+    text,
+)
 from data_engineer_project_weather_analytics_spark.plans.hints import maybe_broadcast
 from data_engineer_project_weather_analytics_spark.sources.catalog import load_table
 
@@ -171,22 +177,36 @@ def x53b_incremental_neardup_stored(spark: SparkSession, sf_dir: str) -> DataFra
     query time — per-batch cost is |batch| shingling plus the probe
     and verify stages.  Byte-identical to x53 by construction →
     shares x53's oracle text verbatim."""
-    import hashlib
-    import os
+    return _lsh_stored(spark, sf_dir, retract_hex=None)
 
-    tag = hashlib.md5(sf_dir.rstrip("/").encode()).hexdigest()[:12]
-    # "_p2": band-partitioned sigs layout (r12) — old unpartitioned
-    # caches under the bare tag must not be reused
-    idx = os.path.join(_LSH_INDEX_ROOT, tag + "_p2")
-    marker = os.path.join(idx, "_DONE")
-    if not os.path.exists(marker):
-        docs = load_table(spark, sf_dir, "documents")
-        corpus = docs.filter(text.deterministic_split("doc_id") == "train")
-        dedup.lsh_index_write(corpus, "doc_id", "text", idx, n=3, n_bands=8)
-        with open(marker, "w") as fh:
-            fh.write(sf_dir)
+
+def _lsh_stored(
+    spark: SparkSession, sf_dir: str, retract_hex: str | None
+) -> DataFrame:
+    """The x53b/x53c body: build (once per corpus file) the stored LSH
+    index of the train split — minus the docs whose md5 sorts below
+    ``retract_hex``, when set — and probe the test split."""
     docs = load_table(spark, sf_dir, "documents")
-    batch = docs.filter(text.deterministic_split("doc_id") == "test")
+    split = text.deterministic_split("doc_id")
+
+    def build(idx: str) -> None:
+        corpus = docs.filter(split == "train")
+        dedup.lsh_index_write(corpus, "doc_id", "text", idx, n=3, n_bands=8)
+        if retract_hex is not None:
+            retracted = corpus.filter(
+                F.md5(F.col("doc_id").cast("string")) < retract_hex
+            ).select("doc_id")
+            index_store.delete_from_index(
+                spark, idx, index_store.LSH_INDEX_LAYOUT, retracted
+            )
+
+    idx = index_store.stored_index(
+        _LSH_INDEX_ROOT, "lsh_retracted" if retract_hex else "lsh",
+        [f"{sf_dir}/documents.parquet"],
+        {"split": "train", "n": 3, "n_bands": 8, "retract": retract_hex},
+        build,
+    )
+    batch = docs.filter(split == "test")
     return dedup.lsh_probe_stored(
         spark, idx, batch, "doc_id", "text",
         n=3, n_bands=8, max_bucket=LSH_MAX_BUCKET, threshold=0.1,
@@ -220,36 +240,7 @@ def x53c_incremental_neardup_retracted(
     corpus narrowed to the retained docs — any ghost row a broken
     delete left behind (a retracted doc still matching probes) fails
     the hash check immediately."""
-    import hashlib
-    import os
-
-    from data_engineer_project_weather_analytics_spark.operators import index_store
-
-    tag = hashlib.md5(sf_dir.rstrip("/").encode()).hexdigest()[:12]
-    idx = os.path.join(_LSH_INDEX_ROOT, tag + "_p2r")
-    marker = os.path.join(idx, "_DONE")
-    if not os.path.exists(marker):
-        docs = load_table(spark, sf_dir, "documents")
-        corpus = docs.filter(text.deterministic_split("doc_id") == "train")
-        dedup.lsh_index_write(corpus, "doc_id", "text", idx, n=3, n_bands=8)
-        retracted = corpus.filter(
-            F.md5(F.col("doc_id").cast("string")) < RETRACT_SPLIT_HEX
-        ).select("doc_id")
-        index_store.delete_from_index(
-            spark, idx, index_store.LSH_INDEX_LAYOUT, retracted
-        )
-        with open(marker, "w") as fh:
-            fh.write(sf_dir)
-    docs = load_table(spark, sf_dir, "documents")
-    batch = docs.filter(text.deterministic_split("doc_id") == "test")
-    return dedup.lsh_probe_stored(
-        spark, idx, batch, "doc_id", "text",
-        n=3, n_bands=8, max_bucket=LSH_MAX_BUCKET, threshold=0.1,
-    ).select(
-        F.col("id_a").alias("corpus_doc_id"),
-        F.col("id_b").alias("batch_doc_id"),
-        "jaccard",
-    )
+    return _lsh_stored(spark, sf_dir, retract_hex=RETRACT_SPLIT_HEX)
 
 
 #: hex threshold of the deterministic "benchmark/eval" slice: docs with
@@ -447,24 +438,30 @@ def x54b_incremental_semdedup_stored(
     corpus pair stream in the per-query plan — the recurring cost is
     the probe itself.  Byte-identical to x54 by construction → shares
     x54's oracle text verbatim."""
-    import hashlib
-    import os
+    return _semdedup_stored(spark, sf_dir, k=similarity.KMEANS_K, two_level=False)
 
-    tag = hashlib.md5(sf_dir.rstrip("/").encode()).hexdigest()[:12]
-    idx = os.path.join(_SEM_INDEX_ROOT, tag)
-    marker = os.path.join(idx, "_DONE")
-    if not os.path.exists(marker):
-        emb = load_table(spark, sf_dir, "embeddings")
-        corpus = emb.filter(text.deterministic_split("vec_id") == "train")
-        similarity.semdedup_index_write(
-            corpus, "vec_id", "embedding", idx,
-            k=similarity.KMEANS_K, n_iter=similarity.KMEANS_ITERS,
-            threshold=0.8,
-        )
-        with open(marker, "w") as fh:
-            fh.write(sf_dir)
+
+def _semdedup_stored(
+    spark: SparkSession, sf_dir: str, k: int | None, two_level: bool
+) -> DataFrame:
+    """The x54b/x54c body: build (once per corpus file and fit) the
+    stored SemDeDup index of the train split, probe the test split."""
     emb = load_table(spark, sf_dir, "embeddings")
-    batch = emb.filter(text.deterministic_split("vec_id") == "test")
+    split = text.deterministic_split("vec_id")
+    params = {
+        "split": "train", "k": k, "n_iter": similarity.KMEANS_ITERS,
+        "threshold": 0.8, "two_level": two_level,
+    }
+    idx = index_store.stored_index(
+        _SEM_INDEX_ROOT, "sem_auto" if two_level else "sem",
+        [f"{sf_dir}/embeddings.parquet"], params,
+        lambda d: similarity.semdedup_index_write(
+            emb.filter(split == "train"), "vec_id", "embedding", d,
+            k=k, n_iter=similarity.KMEANS_ITERS, threshold=0.8,
+            two_level=two_level,
+        ),
+    )
+    batch = emb.filter(split == "test")
     return similarity.semdedup_incremental_stored(
         spark, idx, batch, "vec_id", "embedding", threshold=0.8
     )
@@ -1140,37 +1137,44 @@ def x50_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: stored-PQ-index root: build-once cache keyed to the sf dir (path
-#: hash).  /tmp because the testdata dirs are read-only; in production
-#: this is a lakehouse table the ingestion pipeline maintains.
+#: stored-PQ-index root: build-once cache keyed on the embedding file
+#: and the build params (index_store.stored_index).  /tmp because the
+#: testdata dirs are read-only; in production this is a lakehouse table
+#: the ingestion pipeline maintains.
 _PQ_INDEX_ROOT = "/tmp/spark_graft_pq_index"
+
+
+def _pq_stored_index(
+    spark: SparkSession, sf_dir: str, cell_col: str | None
+) -> str:
+    """The stored PQ index of the whole embedding table (with IVF cells
+    when ``cell_col`` is set), built once per corpus file."""
+    params = {
+        "dim": _PQ_DIM, "m": _PQ_M, "n_codewords": _PQ_CODEWORDS,
+        "cell_col": cell_col,
+    }
+    return index_store.stored_index(
+        _PQ_INDEX_ROOT, "ivfpq" if cell_col else "pq",
+        [f"{sf_dir}/embeddings.parquet"], params,
+        lambda d: similarity.pq_index_write(
+            load_table(spark, sf_dir, "embeddings"), "vec_id", "embedding", d,
+            **params,
+        ),
+    )
 
 
 def x50b_pq_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """x50 split into the production BUILD/QUERY halves: the PQ codes
     and codebook are materialized to parquet ONCE per corpus
-    (operators/similarity.py:pq_index_write — idempotent, keyed to the
-    sf dir) and the query scans the STORED codes (pq_topk_stored):
+    (operators/similarity.py:pq_index_write — cached by
+    index_store.stored_index on the embedding file and the PQ params) and the query scans the STORED codes (pq_topk_stored):
     m=4 ints per row instead of 64 floats, distance tables from the
     stored quantizer max, no codebook-training stages in the per-query
     plan (plan-gated).  This is the real 100 TB ANN read path — build
     once, probe forever; x50's in-query coding is the oracle-friendly
     single-statement form.  Output is byte-identical to x50 by
     construction, so this query shares x50's DuckDB oracle verbatim."""
-    import hashlib
-    import os
-
-    tag = hashlib.md5(sf_dir.rstrip("/").encode()).hexdigest()[:12]
-    idx = os.path.join(_PQ_INDEX_ROOT, tag)
-    marker = os.path.join(idx, "_DONE")
-    if not os.path.exists(marker):
-        emb = load_table(spark, sf_dir, "embeddings")
-        similarity.pq_index_write(
-            emb, "vec_id", "embedding", idx,
-            dim=_PQ_DIM, m=_PQ_M, n_codewords=_PQ_CODEWORDS,
-        )
-        with open(marker, "w") as fh:
-            fh.write(sf_dir)
+    idx = _pq_stored_index(spark, sf_dir, cell_col=None)
     queries = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < _PQ_QUERIES
     )
@@ -1203,23 +1207,7 @@ def x51b_ivfpq_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast probe set — each query touches only its probed posting
     lists, and no training stages appear in the per-query plan.
     Byte-identical to x51 by construction → shares x51's oracle."""
-    import hashlib
-    import os
-
-    tag = hashlib.md5(sf_dir.rstrip("/").encode()).hexdigest()[:12]
-    # "_ivf2": cell-partitioned codes layout (r12) — old unpartitioned
-    # caches under "_ivf" must not be reused
-    idx = os.path.join(_PQ_INDEX_ROOT, tag + "_ivf2")
-    marker = os.path.join(idx, "_DONE")
-    if not os.path.exists(marker):
-        emb = load_table(spark, sf_dir, "embeddings")
-        similarity.pq_index_write(
-            emb, "vec_id", "embedding", idx,
-            dim=_PQ_DIM, m=_PQ_M, n_codewords=_PQ_CODEWORDS,
-            cell_col="label",
-        )
-        with open(marker, "w") as fh:
-            fh.write(sf_dir)
+    idx = _pq_stored_index(spark, sf_dir, cell_col="label")
     queries = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < _PQ_QUERIES
     )
@@ -1458,7 +1446,8 @@ def x54_incremental_semdedup_auto(spark: SparkSession, sf_dir: str) -> DataFrame
     """Deployment form of x54: the incremental SemDeDup probe with the
     corpus-sized cell count (``recommended_kmeans_k``) and the
     two-level index + probe
-    (operators/similarity.py:semdedup_incremental_auto) — the x45_auto
+    (operators/similarity.py:semdedup_incremental with ``k=None,
+    two_level=True``) — the x45_auto
     policy applied to the steady-state ingestion path, so the index
     build is O(n·√k) per pass and the recurring probe cost is
     |batch|·(√k coarse + √k routed fine) scored rows plus the
@@ -1472,8 +1461,9 @@ def x54_incremental_semdedup_auto(spark: SparkSession, sf_dir: str) -> DataFrame
     split = text.deterministic_split("vec_id")
     corpus = emb.filter(split == "train")
     batch = emb.filter(split == "test")
-    return similarity.semdedup_incremental_auto(
-        corpus, batch, "vec_id", "embedding", threshold=0.8
+    return similarity.semdedup_incremental(
+        corpus, batch, "vec_id", "embedding", k=None, threshold=0.8,
+        two_level=True,
     )
 
 
@@ -1482,33 +1472,15 @@ def x54c_incremental_semdedup_auto_stored(
 ) -> DataFrame:
     """The x54b BUILD/QUERY split applied to the DEPLOYMENT (auto-k
     two-level) index: survivors + both final-pass codebooks
-    materialized once (`semdedup_index_write_auto`), the recurring
-    query running ONLY the two-level batch probe against the stored
-    artifacts (`semdedup_incremental_stored_auto`).  This is the
+    materialized once (`semdedup_index_write(k=None, two_level=True)`),
+    the recurring query running ONLY the two-level batch probe against
+    the stored artifacts (`semdedup_incremental_stored`).  This is the
     complete production shape of the semantic-dedup read path — auto-k
     so the verify stream stays linear, stored so the per-batch cost is
     the probe alone.  Rows-only like every auto twin (k depends on a
     runtime count()); row-for-row agreement with
     x54_incremental_semdedup_auto is pinned by pytest."""
-    import hashlib
-    import os
-
-    tag = hashlib.md5(sf_dir.rstrip("/").encode()).hexdigest()[:12]
-    idx = os.path.join(_SEM_INDEX_ROOT, tag + "_auto")
-    marker = os.path.join(idx, "_DONE")
-    if not os.path.exists(marker):
-        emb = load_table(spark, sf_dir, "embeddings")
-        corpus = emb.filter(text.deterministic_split("vec_id") == "train")
-        similarity.semdedup_index_write_auto(
-            corpus, "vec_id", "embedding", idx, threshold=0.8
-        )
-        with open(marker, "w") as fh:
-            fh.write(sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
-    batch = emb.filter(text.deterministic_split("vec_id") == "test")
-    return similarity.semdedup_incremental_stored_auto(
-        spark, idx, batch, "vec_id", "embedding", threshold=0.8
-    )
+    return _semdedup_stored(spark, sf_dir, k=None, two_level=True)
 
 
 #: rows-only registrations (genuinely non-SQL-expressible paths)

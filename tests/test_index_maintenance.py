@@ -594,3 +594,94 @@ def test_rebuild_index_crash_recovery(spark, tmp_path):
 
     # healthy index: no-op
     assert index_store.recover_rebuild(idx) is None
+
+
+def test_stored_index_rebuilds_when_input_is_rewritten(spark, tmp_path, monkeypatch):
+    """The stored-index cache is keyed on the input files' content
+    stamps, not on the path: rewriting ``embeddings.parquet`` IN PLACE
+    with a different corpus must make x54b serve a fresh index — the
+    same rows a build from scratch returns — never the old one."""
+    import hashlib
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import data_engineer_project_weather_analytics_spark.plans.extensions as E
+
+    from .conftest import SF_DIR
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    path = str(sf / "embeddings.parquet")
+    shutil.copyfile(f"{SF_DIR}/embeddings.parquet", path)
+    monkeypatch.setattr(E, "_SEM_INDEX_ROOT", str(tmp_path / "cached"))
+
+    def rows():
+        return sorted(
+            tuple(r) for r in E.x54b_incremental_semdedup_stored(spark, str(sf)).collect()
+        )
+
+    before = rows()
+
+    # plant an exact copy of every batch vector on a corpus row: a fresh
+    # index holds the copies (or a near survivor), so every batch vector
+    # must now be dropped; the stale index would keep most of them
+    t = pq.read_table(path)
+    is_batch = [
+        hashlib.md5(str(v).encode()).hexdigest() >= "cd"
+        for v in t.column("vec_id").to_pylist()
+    ]
+    emb = t.column("embedding").to_pylist()
+    batch_vecs = [e for e, b in zip(emb, is_batch) if b]
+    corpus_pos = [i for i, b in enumerate(is_batch) if not b]
+    for pos, vec in zip(corpus_pos, batch_vecs):
+        emb[pos] = vec
+    t = t.set_column(
+        t.schema.get_field_index("embedding"),
+        t.schema.field("embedding"),
+        pa.array(emb, type=t.schema.field("embedding").type),
+    )
+    pq.write_table(t, path)
+
+    after = rows()
+    monkeypatch.setattr(E, "_SEM_INDEX_ROOT", str(tmp_path / "fresh"))
+    assert after == rows()
+    assert after != before
+    assert all(r[-1] == 0 for r in after)  # kept flag: every copy drops
+
+
+def test_stored_index_failed_build_leaves_no_live_dir(tmp_path):
+    """A build that raises leaves no live index behind; the next call
+    builds cleanly, and later calls with the same inputs and params
+    serve that index without building again."""
+    import os
+
+    import pytest
+
+    from data_engineer_project_weather_analytics_spark.operators import index_store
+
+    src = tmp_path / "table.parquet"
+    src.write_text("rows")
+    root = str(tmp_path / "idx")
+
+    def failing(d):
+        os.makedirs(d)
+        open(os.path.join(d, "half_written"), "w").close()
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError):
+        index_store.stored_index(root, "fam", [str(src)], {"p": 1}, failing)
+    assert not [p for p in os.listdir(root) if not p.endswith(".rebuild_staged")]
+
+    def good(d):
+        os.makedirs(d)
+        open(os.path.join(d, "artifact"), "w").close()
+
+    idx = index_store.stored_index(root, "fam", [str(src)], {"p": 1}, good)
+    assert sorted(os.listdir(idx)) == ["artifact"]
+    assert os.listdir(root) == [os.path.basename(idx)]
+    # cache hit: the failing build is never called
+    assert index_store.stored_index(root, "fam", [str(src)], {"p": 1}, failing) == idx
+    # other params key another index
+    assert index_store.stored_index(root, "fam", [str(src)], {"p": 2}, good) != idx

@@ -1336,12 +1336,13 @@ def test_semdedup_incremental_auto_pins_planted_dups(spark):
     schema = "vec_id long, embedding array<double>"
     out = {
         r["vec_id"]: r
-        for r in similarity.semdedup_incremental_auto(
+        for r in similarity.semdedup_incremental(
             spark.createDataFrame(corpus_rows, schema),
             spark.createDataFrame(batch_rows, schema),
             "vec_id",
             "embedding",
             k=8,
+            two_level=True,
         ).collect()
     }
     assert set(out) == {1000, 1001}

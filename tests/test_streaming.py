@@ -1011,10 +1011,12 @@ def test_streaming_semdedup_probe_equals_batch_x54(spark, tmp_path):
     schema = "vec_id long, embedding array<double>"
     corpus_df = spark.createDataFrame(corpus, schema)
     batch_df = spark.createDataFrame(batch, schema)
-    survivors, cents = similarity.semdedup_corpus_index(
+    survivors, codebook = similarity.semdedup_corpus_index(
         corpus_df, "vec_id", "embedding", k=8
     )
-    centroids = [(r["cell"], list(r["centroid"])) for r in cents.collect()]
+    centroids = [
+        (r["cell"], list(r["centroid"])) for r in codebook["cents"].collect()
+    ]
     seed_rows = [
         (r["corpus_id"], list(r["__cv"])) for r in survivors.collect()
     ]
@@ -1095,7 +1097,7 @@ def test_streaming_semdedup_stored_probe_equals_batch_x54c(spark, tmp_path):
     """Stream ≡ batch for the STORED-index probe (VERDICT r11 task 5):
     the stream consumes the x54c artifacts — survivors seeded into
     state, BOTH codebooks (fmap/occ) folded in as literals — and its
-    decisions must equal semdedup_incremental_stored_auto's rows
+    decisions must equal semdedup_incremental_stored's rows
     exactly.  The two-level literal assignment routes coarse→fine like
     the batch probe (bit-identical packed-argmax keys), so the stream
     pays ~2·√k cosines per row instead of the flat k that dominated
@@ -1112,8 +1114,8 @@ def test_streaming_semdedup_stored_probe_equals_batch_x54c(spark, tmp_path):
     corpus_df = spark.createDataFrame(corpus, schema)
     batch_df = spark.createDataFrame(batch, schema)
     idx = str(tmp_path / "auto_idx")
-    similarity.semdedup_index_write_auto(
-        corpus_df, "vec_id", "embedding", idx
+    similarity.semdedup_index_write(
+        corpus_df, "vec_id", "embedding", idx, k=None, two_level=True
     )
     survivors = spark.read.parquet(f"{idx}/survivors")
     fmap_rows = [
@@ -1167,7 +1169,7 @@ def test_streaming_semdedup_stored_probe_equals_batch_x54c(spark, tmp_path):
         r["vec_id"]: (
             r["cluster_id"], r["n_corpus_near"], r["best_sim"], r["kept"]
         )
-        for r in similarity.semdedup_incremental_stored_auto(
+        for r in similarity.semdedup_incremental_stored(
             spark, idx, batch_df, "vec_id", "embedding"
         ).collect()
     }
@@ -1293,11 +1295,13 @@ def test_streaming_ingest_verdict_equals_batch_x59(spark, tmp_path):
     # corpus index (the proven stream≡batch path), probe in one trigger
     emb = load_table(spark, SF_DIR, "embeddings")
     esplit = text.deterministic_split("vec_id")
-    survivors, cents = similarity.semdedup_corpus_index(
+    survivors, codebook = similarity.semdedup_corpus_index(
         emb.filter(esplit == "train"), "vec_id", "embedding",
         similarity.KMEANS_K, similarity.KMEANS_ITERS, 0.8,
     )
-    centroids = [(r["cell"], list(r["centroid"])) for r in cents.collect()]
+    centroids = [
+        (r["cell"], list(r["centroid"])) for r in codebook["cents"].collect()
+    ]
     seed_rows = [(r["corpus_id"], list(r["__cv"])) for r in survivors.collect()]
     probe_rows = [
         (r["vec_id"], [float(x) for x in r["embedding"]])
