@@ -9,6 +9,10 @@ injectable fetch — a REST ``mapInPandas`` source in production, literal
 docs in tests), flattened once, then split into the cities dimension
 and the current_weather fact, each appended to its keyed
 :class:`~data_engineer_project_weather_analytics_spark.operators.upsert.UpsertTable`.
+One fetch per round feeds both tables, as in the reference, which
+upserts both from the same response dict (``dags/etl.py:127-136``): the
+flattened round is persisted for the two appends, so the lazy fetch
+runs once per city per round and both tables see the same answer.
 The reference's row-at-a-time ``ON CONFLICT DO UPDATE`` loop becomes
 one batch append + last-write-wins view per table — same final state,
 one shuffle per read instead of |rows| round-trips.
@@ -23,6 +27,7 @@ from __future__ import annotations
 
 from collections.abc import Iterable
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
@@ -83,13 +88,21 @@ def run_etl(
     transaction); re-running a round re-appends it, and last-write-wins
     makes that idempotent — the exactly-once story the reference gets
     from Postgres PKs.
+
+    One fetch per round feeds both tables (``dags/etl.py:127-136``):
+    the round's flattened rows are persisted (memory, spilling to disk)
+    for the two appends and unpersisted after them, so the cities
+    append runs the fetch and the fact append reads the cached rows.
     """
     if cities_mode not in ("upsert", "insert_if_absent"):
         raise ValueError(f"unknown cities_mode: {cities_mode!r}")
     for raw in fetch_rounds:
-        flat = parse_current(raw)
-        cities_table.append_batch(to_cities_dim(flat))
-        current_table.append_batch(to_current_weather_fact(flat))
+        flat = parse_current(raw).persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            cities_table.append_batch(to_cities_dim(flat))
+            current_table.append_batch(to_current_weather_fact(flat))
+        finally:
+            flat.unpersist()
     if cities_mode == "upsert":
         cities = latest_write_wins(
             cities_table.read_raw(), cities_table.keys, tiebreak=CITIES_TIEBREAK

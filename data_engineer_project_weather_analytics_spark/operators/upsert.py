@@ -23,8 +23,10 @@ amplification bounded.
 
 from __future__ import annotations
 
+import warnings
 from collections.abc import Sequence
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -183,7 +185,14 @@ class UpsertTable:
     by the retention window.
 
     Single-writer, like the Postgres connection it models: appends
-    during a compaction belong to the generation being retired.  At
+    during a compaction belong to the generation being retired.  The
+    writer remembers the live generation and the next ``ingest_seq``
+    after each of its own appends and compactions, so an append does
+    not re-scan the store for ``max(ingest_seq)``; a freshly opened
+    instance, or one whose remembered generation another instance has
+    since compacted away, scans once.  A second instance appending to
+    the same generation breaks that memory, as it would break the
+    single-writer contract anyway.  At
     scale the store would additionally be partitioned by a date derived
     from the event time (``partition_cols``) so readers prune; the
     dedup shuffle only touches partitions a batch actually wrote.
@@ -204,6 +213,11 @@ class UpsertTable:
         self.keys = list(keys)
         self.partition_cols = list(partition_cols)
         self.keep_generations = keep_generations
+        #: ``(live generation, next ingest_seq)`` as this writer left
+        #: it; None until an append or compaction has established it.
+        self._seq_memo: tuple[int, int] | None = None
+        #: Retired paths a compaction failed to delete.
+        self.cleanup_failures: list[str] = []
 
     # -- generation bookkeeping (Hadoop FS: works for any scheme) ----
 
@@ -244,31 +258,50 @@ class UpsertTable:
     def _gen_dir(self, n: int) -> str:
         return f"{self.path}/gen={n}"
 
-    def _exists(self) -> bool:
-        return self._generation() is not None
-
-    def _next_seq(self) -> int:
-        if not self._exists():
+    def _remembered_seq(self, gen: int | None) -> int | None:
+        """The next ``ingest_seq`` of live generation ``gen`` if this
+        writer knows it without a scan, else None."""
+        if gen is None:
             return 0
-        row = self.read_raw().agg(F.max(INGEST_SEQ)).first()
+        if self._seq_memo is not None and self._seq_memo[0] == gen:
+            return self._seq_memo[1]
+        return None
+
+    def _scan_next_seq(self, gen: int) -> int:
+        row = (
+            self.spark.read.parquet(self._gen_dir(gen))
+            .agg(F.max(INGEST_SEQ))
+            .first()
+        )
         return 0 if row[0] is None else int(row[0]) + 1
 
     def append_batch(self, batch: DataFrame, seq: int | None = None) -> int:
         """Append one upsert batch; returns the sequence it was given.
 
+        Without ``seq`` the batch gets the next sequence of the live
+        generation — remembered from this writer's last append or
+        compaction, scanned only when the live generation has changed
+        under it.  An explicit ``seq`` raises the remembered next
+        sequence to at least ``seq + 1``.
+
         Rows written are observed in-flight (K5 audit — see
         operators/observe.py) and exposed as ``self.last_metrics``."""
         from data_engineer_project_weather_analytics_spark.operators.observe import with_write_metrics
 
-        gen = self._generation()
-        seq = self._next_seq() if seq is None else seq
+        gen = self._generation()  # the one directory listing per append
+        known = self._remembered_seq(gen)
+        if seq is None:
+            seq = known if known is not None else self._scan_next_seq(gen)
+            known = seq
         stamped, obs = with_write_metrics(stamp_batch(batch, seq))
         writer = stamped.write.mode("append")
         if self.partition_cols:
             writer = writer.partitionBy(*self.partition_cols)
         writer.parquet(self._gen_dir(gen if gen is not None else 0))
         if gen is None:
-            self._commit_generation(0)
+            gen = 0
+            self._commit_generation(gen)
+        self._seq_memo = None if known is None else (gen, max(known, seq + 1))
         self.last_metrics = obs.get
         return seq
 
@@ -321,18 +354,30 @@ class UpsertTable:
             writer = writer.partitionBy(*self.partition_cols)
         writer.parquet(self._gen_dir(new))
         self._commit_generation(new)  # readers switch here, atomically
-        # retire generations beyond the retention window: cleanup is
-        # best-effort and unobservable (marker-max readers never look
-        # at them by default; snapshot readers see only retained ones)
+        self._seq_memo = (new, 1)  # the snapshot is stamped seq 0
+        # retire generations beyond the retention window: readers never
+        # see a failed cleanup (marker-max readers never look at retired
+        # generations; snapshot readers see only retained ones), so it
+        # is recorded in cleanup_failures and warned about, not raised
         for old in self.generations():
             if old <= new - self.keep_generations:
                 self._delete_path(f"{self.path}/_committed_{old}")
                 self._delete_path(self._gen_dir(old))
 
     def _delete_path(self, path: str) -> None:
-        """Remove a retired directory via Hadoop FS (any scheme)."""
+        """Remove a retired directory via Hadoop FS (any scheme); a
+        failure is recorded in ``cleanup_failures`` and warned about."""
         try:
             fs, jvm = self._fs()
-            fs.delete(jvm.org.apache.hadoop.fs.Path(path), True)
-        except Exception:
-            pass  # cleanup best-effort; stale dirs are harmless to reads
+            target = jvm.org.apache.hadoop.fs.Path(path)
+            if fs.delete(target, True) or not fs.exists(target):
+                return
+            reason = "delete returned false"
+        except Py4JJavaError as e:
+            reason = e.java_exception.toString()
+        self.cleanup_failures.append(path)
+        warnings.warn(
+            f"upsert table cleanup left {path} behind: {reason}",
+            RuntimeWarning,
+            stacklevel=3,
+        )

@@ -120,6 +120,60 @@ def test_run_etl_redelivery_idempotent(spark, tmp_path, replay_con):
     )
 
 
+def test_run_etl_fetches_each_city_once(spark, tmp_path):
+    """The reference makes one GET per city per round and upserts both
+    tables from that one answer (``dags/etl.py:127-136``).  Every call
+    of this fetch answers differently — call k reports ``temp = k`` and
+    a name ending in ``k`` — so a second fetch of a city shows up in
+    the call log and splits its cities row from its current_weather
+    row."""
+    import fcntl
+
+    from pyspark.sql import Row
+
+    from data_engineer_project_weather_analytics_spark.plans.weather import (
+        _current_doc,
+    )
+    from data_engineer_project_weather_analytics_spark.sources.rest import (
+        fetch_payloads,
+    )
+
+    ids = {"Hanoi": 1581130, "Da Nang": 1583992, "Hue": 1580578, "Can Tho": 1905468}
+    log = str(tmp_path / "fetches.log")
+
+    def fetch_fn_for(round_no):
+        def fetch(city):
+            with open(log, "a+") as f:  # append + count under one lock
+                fcntl.flock(f, fcntl.LOCK_EX)
+                f.write(f"{round_no}\t{city}\n")
+                f.flush()
+                f.seek(0)
+                k = len(f.readlines())
+            return _current_doc(
+                ids[city], f"{city} {k}", "VN", float(k), 70, 1764576000
+            )
+
+        return fetch
+
+    cities_df = spark.createDataFrame([Row(city=c) for c in ids], schema="city string")
+    rounds = [
+        fetch_payloads(cities_df, fetch_fn=fetch_fn_for(r), delay_s=0.0)
+        for r in range(2)
+    ]
+    cities_t, current_t = _tables(spark, tmp_path)
+    cities, current = run_etl(spark, rounds, cities_t, current_t)
+
+    with open(log) as f:
+        calls = [tuple(line.rstrip("\n").split("\t")) for line in f]
+    assert sorted(calls) == sorted((str(r), c) for r in range(2) for c in ids)
+
+    names = {r.city_id: r.city_name for r in cities.collect()}
+    temps = {r.city_id: r.temp for r in current.collect()}
+    assert names.keys() == temps.keys() == set(ids.values())
+    for city_id, name in names.items():
+        assert name.endswith(f" {int(temps[city_id])}"), (name, temps[city_id])
+
+
 def test_run_etl_cities_insert_if_absent_mode(spark, tmp_path):
     """notebook-cell-19 semantics (ON CONFLICT DO NOTHING): the round-2
     rename of Hồ Chí Minh must NOT propagate."""

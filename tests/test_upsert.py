@@ -78,6 +78,76 @@ def test_compaction_preserves_view(spark, table):
     assert _latest_dict(table.read_latest())[(1, 10)] == 30.0
 
 
+def test_append_sequence_numbers_survive_reopen_and_foreign_compaction(spark, tmp_path):
+    """The writer remembers its next ingest_seq instead of scanning for
+    it; a fresh instance and a generation compacted by another
+    instance still fall back to the scan, so newer writes keep
+    winning."""
+    path = str(tmp_path / "seq")
+    keys = ["city_id", "dt"]
+    w = UpsertTable(spark, path, keys=keys)
+    assert [w.append_batch(_rows(spark, [(1, 10, t)])) for t in (1.0, 2.0, 3.0)] == [0, 1, 2]
+    assert _latest_dict(w.read_latest()) == {(1, 10): 3.0}
+
+    # a second instance on the same path continues at max + 1
+    reopened = UpsertTable(spark, path, keys=keys)
+    assert reopened.append_batch(_rows(spark, [(1, 10, 4.0)])) == 3
+    assert _latest_dict(reopened.read_latest()) == {(1, 10): 4.0}
+
+    # another instance compacts (snapshot restamped at seq 0): the
+    # writer's next append must still beat the compacted rows
+    UpsertTable(spark, path, keys=keys).compact()
+    assert w.append_batch(_rows(spark, [(1, 10, 5.0)])) == 1
+    assert _latest_dict(w.read_latest()) == {(1, 10): 5.0}
+
+    # an explicit seq above the remembered one moves it up
+    assert w.append_batch(_rows(spark, [(1, 10, 6.0)]), seq=10) == 10
+    assert w.append_batch(_rows(spark, [(1, 10, 7.0)])) == 11
+    # ... and one below it does not move it down
+    assert w.append_batch(_rows(spark, [(2, 10, 1.0)]), seq=0) == 0
+    assert w.append_batch(_rows(spark, [(1, 10, 8.0)])) == 12
+    assert _latest_dict(w.read_latest()) == {(1, 10): 8.0, (2, 10): 1.0}
+
+
+@pytest.mark.parametrize("failure", ["raises", "returns_false"])
+def test_compact_records_failed_cleanup(spark, table, monkeypatch, failure):
+    """A retired generation that cannot be deleted must not fail the
+    compaction (readers never see it) but must not vanish silently
+    either: the path is recorded and a warning is emitted."""
+    table.append_batch(_rows(spark, [(1, 10, 20.0)]))
+    table.append_batch(_rows(spark, [(1, 10, 25.0)]))
+    real_fs = UpsertTable._fs
+
+    class FailingDelete:
+        def __init__(self, fs, jvm):
+            self._fs, self._jvm = fs, jvm
+
+        def delete(self, path, recursive):
+            if failure == "returns_false":
+                return False
+            # a genuine JVM IOException surfacing through Py4J
+            self._jvm.java.io.FileInputStream(f"{table.path}/no-such-file")
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    def failing_fs(self):
+        fs, jvm = real_fs(self)
+        return FailingDelete(fs, jvm), jvm
+
+    monkeypatch.setattr(UpsertTable, "_fs", failing_fs)
+    with pytest.warns(RuntimeWarning, match="cleanup left"):
+        table.compact()
+    monkeypatch.setattr(UpsertTable, "_fs", real_fs)
+
+    assert table._generation() == 1  # committed despite the failed cleanup
+    assert _latest_dict(table.read_latest()) == {(1, 10): 25.0}
+    assert table.cleanup_failures == [
+        f"{table.path}/_committed_0",
+        f"{table.path}/gen=0",
+    ]
+
+
 def test_insert_if_absent_first_write_wins(spark):
     existing = _rows(spark, [(1, 10, 20.0)])
     batch = _rows(spark, [(1, 10, 99.0), (2, 10, 21.0)])
