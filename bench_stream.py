@@ -118,15 +118,13 @@ def measure(spark, copies: int) -> dict:
             corpus, "vec_id", "embedding", d, k=None, two_level=True
         ),
     )
-    survivors = spark.read.parquet(f"{idx}/survivors")
+    index = index_store.read_index(spark, idx, index_store.SEM_INDEX_LAYOUT)
+    survivors = index["survivors"]
     fmap_rows = [
         (r["cell"], list(r["centroid"]), r["coarse"])
-        for r in spark.read.parquet(f"{idx}/fmap").collect()
+        for r in index["fmap"].collect()
     ]
-    occ_rows = [
-        (r["coarse"], list(r["ccent"]))
-        for r in spark.read.parquet(f"{idx}/occ").collect()
-    ]
+    occ_rows = [(r["coarse"], list(r["ccent"])) for r in index["occ"].collect()]
     k = len(fmap_rows)
     # the stream's two-level seed assignment is bit-identical to the
     # fit's final pass (pinned by the x54c stream≡batch test), so the

@@ -72,6 +72,28 @@ def first_write_wins(
     )
 
 
+def _views(cities_mode: str):
+    """Validate ``cities_mode`` and return the view policy shared by
+    :func:`run_etl` and :func:`etl_final_state`:
+    ``views(cities_raw, cities_keys, fact_raw, fact_keys)`` folds the
+    stamped rows into the canonical ``(cities, current_weather)`` pair —
+    cities by ``cities_mode`` (``"upsert"``: last write wins;
+    ``"insert_if_absent"``: first write wins), the fact always last
+    write wins, each with its deterministic tiebreak."""
+    folds = {"upsert": latest_write_wins, "insert_if_absent": first_write_wins}
+    if cities_mode not in folds:
+        raise ValueError(f"unknown cities_mode: {cities_mode!r}")
+    cities_fold = folds[cities_mode]
+
+    def views(cities_raw, cities_keys, fact_raw, fact_keys):
+        return (
+            cities_fold(cities_raw, cities_keys, tiebreak=CITIES_TIEBREAK),
+            latest_write_wins(fact_raw, fact_keys, tiebreak=CURRENT_FACT_TIEBREAK),
+        )
+
+    return views
+
+
 def run_etl(
     spark: SparkSession,
     fetch_rounds: Iterable[DataFrame],
@@ -94,8 +116,7 @@ def run_etl(
     for the two appends and unpersisted after them, so the cities
     append runs the fetch and the fact append reads the cached rows.
     """
-    if cities_mode not in ("upsert", "insert_if_absent"):
-        raise ValueError(f"unknown cities_mode: {cities_mode!r}")
+    views = _views(cities_mode)
     for raw in fetch_rounds:
         flat = parse_current(raw).persist(StorageLevel.MEMORY_AND_DISK)
         try:
@@ -103,17 +124,9 @@ def run_etl(
             current_table.append_batch(to_current_weather_fact(flat))
         finally:
             flat.unpersist()
-    if cities_mode == "upsert":
-        cities = latest_write_wins(
-            cities_table.read_raw(), cities_table.keys, tiebreak=CITIES_TIEBREAK
-        )
-    else:
-        cities = first_write_wins(
-            cities_table.read_raw(), cities_table.keys, tiebreak=CITIES_TIEBREAK
-        )
-    return cities, latest_write_wins(
+    return views(
+        cities_table.read_raw(), cities_table.keys,
         current_table.read_raw(), current_table.keys,
-        tiebreak=CURRENT_FACT_TIEBREAK,
     )
 
 
@@ -129,7 +142,9 @@ def etl_final_state(
     The dimension view is broadcast onto the fact (J1 shape); both
     views are last-write-wins folds over the stamped round union, so
     the plan is two keyed window shuffles + one broadcast join
-    regardless of round count."""
+    regardless of round count.  An unknown ``cities_mode`` raises
+    ``ValueError``, as in :func:`run_etl`."""
+    views = _views(cities_mode)
     cities_batches = []
     fact_batches = []
     for seq, raw in enumerate(rounds):
@@ -142,17 +157,7 @@ def etl_final_state(
     fact_all = fact_batches[0]
     for b in fact_batches[1:]:
         fact_all = fact_all.unionByName(b)
-    if cities_mode == "upsert":
-        cities = latest_write_wins(
-            cities_all, ["city_id"], tiebreak=CITIES_TIEBREAK
-        )
-    else:
-        cities = first_write_wins(
-            cities_all, ["city_id"], tiebreak=CITIES_TIEBREAK
-        )
-    fact = latest_write_wins(
-        fact_all, ["city_id", "dt"], tiebreak=CURRENT_FACT_TIEBREAK
-    )
+    cities, fact = views(cities_all, ["city_id"], fact_all, ["city_id", "dt"])
     return fact.join(F.broadcast(cities), "city_id")
 
 

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_engineer_project_weather_analytics_spark.operators import index_store
+
 
 def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Content-hash groups: canonical (min) id + copy count per
@@ -276,6 +278,22 @@ def minhash_with_sizes(
     return sigs, sizes
 
 
+def _cap_buckets(signatures: DataFrame, max_bucket: int | None) -> DataFrame:
+    """Keep only the signature rows of buckets whose width (row count
+    per ``(band, minhash)``) lies in ``[2, max_bucket]`` — the
+    pre-counted cap of :func:`lsh_candidate_pairs` and
+    :func:`lsh_candidate_pairs_cross`; ``None`` keeps every row."""
+    if max_bucket is None:
+        return signatures
+    kept = (
+        signatures.groupBy("band", "minhash")
+        .agg(F.count(F.lit(1)).alias("__width"))
+        .filter((F.col("__width") >= 2) & (F.col("__width") <= max_bucket))
+        .select("band", "minhash")
+    )
+    return signatures.join(kept, ["band", "minhash"], "left_semi")
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame, id_col: str, max_bucket: int | None = None
 ) -> DataFrame:
@@ -307,16 +325,7 @@ def lsh_candidate_pairs(
     identical by construction, so results match the uncapped-then-
     filtered formulation exactly.  (Width = row count: upstream
     :func:`minhash_signatures` emits exactly one row per (doc, band).)"""
-    if max_bucket is not None:
-        kept = (
-            signatures.groupBy("band", "minhash")
-            .agg(F.count(F.lit(1)).alias("__width"))
-            .filter(
-                (F.col("__width") >= 2) & (F.col("__width") <= max_bucket)
-            )
-            .select("band", "minhash")
-        )
-        signatures = signatures.join(kept, ["band", "minhash"], "left_semi")
+    signatures = _cap_buckets(signatures, max_bucket)
     buckets = (
         signatures.groupBy("band", "minhash")
         .agg(F.sort_array(F.collect_set(F.col(id_col))).alias("ids"))
@@ -358,16 +367,7 @@ def lsh_candidate_pairs_cross(
     ``side_col`` must be 'train' (corpus) / 'test' (batch) per row
     (:func:`..text.deterministic_split` shape).  Output:
     ``(id_a ∈ corpus, id_b ∈ batch)``, distinct."""
-    if max_bucket is not None:
-        kept = (
-            signatures.groupBy("band", "minhash")
-            .agg(F.count(F.lit(1)).alias("__width"))
-            .filter(
-                (F.col("__width") >= 2) & (F.col("__width") <= max_bucket)
-            )
-            .select("band", "minhash")
-        )
-        signatures = signatures.join(kept, ["band", "minhash"], "left_semi")
+    signatures = _cap_buckets(signatures, max_bucket)
     buckets = (
         signatures.groupBy("band", "minhash")
         .agg(
@@ -685,6 +685,19 @@ def jaccard_pairs(
 # Stored LSH index: the build / append / probe lifecycle
 # ---------------------------------------------------------------------------
 
+def _lsh_index(
+    docs: DataFrame, id_col: str, text_col: str, n: int, n_bands: int
+) -> dict[str, DataFrame]:
+    """The LSH index frames of ``docs`` under their ``LSH_INDEX_LAYOUT``
+    names: ``sigs`` (per-(doc, band) MinHash signatures) and ``sets``
+    (per-doc packed hashed-shingle sets)."""
+    ds = doc_shingles(docs, id_col, text_col, n=n)
+    return {
+        "sigs": minhash_signatures(ds, id_col, n_bands=n_bands),
+        "sets": doc_shingle_hash_sets(docs, id_col, text_col, n=n),
+    }
+
+
 def lsh_index_write(
     corpus: DataFrame,
     id_col: str,
@@ -703,22 +716,10 @@ def lsh_index_write(
     band's files) and ``sets`` (per-doc packed hashed-shingle sets,
     :func:`doc_shingle_hash_sets`) — everything a future batch probe
     needs; the corpus TEXT is never read again."""
-    from data_engineer_project_weather_analytics_spark.operators import index_store
-
-    ds = doc_shingles(corpus, id_col, text_col, n=n)
-    minhash_signatures(ds, id_col, n_bands=n_bands).write.mode(
-        "overwrite"
-    ).partitionBy("band").parquet(f"{index_dir}/sigs")
-    doc_shingle_hash_sets(corpus, id_col, text_col, n=n).write.mode(
-        "overwrite"
-    ).parquet(f"{index_dir}/sets")
-    spark = corpus.sparkSession
-    index_store.record_base_rows(
+    index_store.write_index(
+        _lsh_index(corpus, id_col, text_col, n, n_bands),
         index_dir,
-        {
-            sub: spark.read.parquet(f"{index_dir}/{sub}").count()
-            for sub in ("sigs", "sets")
-        },
+        index_store.LSH_INDEX_LAYOUT,
     )
 
 
@@ -740,13 +741,12 @@ def lsh_index_append(
     data derives only from the batch (the index is never read), so the
     append is a plain additive write — safe while concurrent probes
     hold older file listings."""
-    ds = doc_shingles(batch, id_col, text_col, n=n)
-    minhash_signatures(ds, id_col, n_bands=n_bands).write.mode(
-        "append"
-    ).partitionBy("band").parquet(f"{index_dir}/sigs")
-    doc_shingle_hash_sets(batch, id_col, text_col, n=n).write.mode(
-        "append"
-    ).parquet(f"{index_dir}/sets")
+    index_store.write_index(
+        _lsh_index(batch, id_col, text_col, n, n_bands),
+        index_dir,
+        index_store.LSH_INDEX_LAYOUT,
+        append=True,
+    )
 
 
 def lsh_probe_stored(
@@ -771,19 +771,17 @@ def lsh_probe_stored(
     stored sets + the batch's fresh sets.  Output ``(id_a ∈ corpus,
     id_b ∈ batch, jaccard)`` — byte-identical to the in-query
     x53 computation on the same corpus by construction."""
-    bds = doc_shingles(batch, id_col, text_col, n=n)
-    bsigs = minhash_signatures(bds, id_col, n_bands=n_bands)
+    stored = index_store.read_index(spark, index_dir, index_store.LSH_INDEX_LAYOUT)
+    fresh = _lsh_index(batch, id_col, text_col, n, n_bands)
     sided = (
-        spark.read.parquet(f"{index_dir}/sigs")
+        stored["sigs"]
         .withColumn("side", F.lit("train"))
-        .unionByName(bsigs.withColumn("side", F.lit("test")))
+        .unionByName(fresh["sigs"].withColumn("side", F.lit("test")))
     )
     cand = lsh_candidate_pairs_cross(
         sided, id_col, "side", max_bucket=max_bucket
     )
-    doc_sets = spark.read.parquet(f"{index_dir}/sets").unionByName(
-        doc_shingle_hash_sets(batch, id_col, text_col, n=n)
-    )
+    doc_sets = stored["sets"].unionByName(fresh["sets"])
     return jaccard_for_candidates_packed(
         doc_sets, id_col, cand, threshold=threshold
     )

@@ -1,4 +1,11 @@
-"""Stored-index housekeeping shared by the index families.
+"""Stored-index format and housekeeping shared by the index families.
+
+Every family builds its index as a dict of named frames (the
+``*_INDEX_LAYOUT`` artifact names) and probes such a dict, whether it
+was built in-query or read back from disk.  This module is the only
+place that turns the dict into parquet and back (:func:`write_index`,
+:func:`read_index`), so the layout declared below is the layout on
+disk.
 
 The append lifecycle (``dedup.lsh_index_append``,
 ``similarity.semdedup_index_append``) adds a handful of parquet files
@@ -42,6 +49,7 @@ import os
 import shutil
 from collections.abc import Callable
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: sidecar recording the row counts of the append-bearing artifacts at
@@ -102,6 +110,11 @@ def _n_parquet_files(path: str) -> int:
     )
 
 
+def _partition_cols(df, spec: dict) -> list[str]:
+    """The artifact's layout partition columns that ``df`` carries."""
+    return [c for c in spec.get("partition", ()) if c in df.columns]
+
+
 def _staged_rewrite(df, path: str, spec: dict, target_files: int) -> None:
     """Write ``df`` as the new contents of artifact ``path`` via the
     crash-safe staged-rename swap.  Partitioned artifacts get one file
@@ -111,7 +124,7 @@ def _staged_rewrite(df, path: str, spec: dict, target_files: int) -> None:
     parent, sub = os.path.split(path.rstrip("/"))
     staged = os.path.join(parent, f".compact_{sub}")
     trash = os.path.join(parent, f".compact_trash_{sub}")
-    pcols = [c for c in spec.get("partition", ()) if c in df.columns]
+    pcols = _partition_cols(df, spec)
     sort_cols = [c for c in spec.get("sort", ()) if c in df.columns]
     if pcols:
         w = df.repartition(*[F.col(c) for c in pcols])
@@ -210,9 +223,55 @@ def delete_from_index(
     return stats
 
 
+def write_index(
+    frames: dict[str, DataFrame],
+    index_dir: str,
+    layout: dict[str, dict],
+    *,
+    append: bool = False,
+) -> None:
+    """The one writer of the on-disk index format: each frame becomes
+    the parquet artifact ``<index_dir>/<name>``, hive-partitioned on
+    its layout ``partition`` columns when the frame carries them (the
+    rule compaction applies too — flat PQ codes have no ``cell`` and
+    stay unpartitioned).
+
+    A fresh build overwrites and records the base rows of its keyed
+    artifacts (:func:`record_base_rows`); ``append=True`` adds files to
+    the live artifacts and records nothing.  No sort is applied —
+    compaction owns the sorted layout."""
+    for name, df in frames.items():
+        pcols = _partition_cols(df, layout[name])
+        writer = df.write.mode("append" if append else "overwrite")
+        if pcols:
+            writer = writer.partitionBy(*pcols)
+        writer.parquet(os.path.join(index_dir, name))
+    if not append:
+        spark = next(iter(frames.values())).sparkSession
+        record_base_rows(
+            index_dir,
+            {
+                name: spark.read.parquet(os.path.join(index_dir, name)).count()
+                for name in frames
+                if layout[name]["key"] is not None
+            },
+        )
+
+
+def read_index(spark, index_dir: str, layout: dict[str, dict]) -> dict[str, DataFrame]:
+    """The stored index as the same dict of named frames its build
+    returned — one lazy parquet scan per artifact present on disk
+    (an index variant without ``centroids``, say, has no such key)."""
+    return {
+        name: spark.read.parquet(path)
+        for name in layout
+        if os.path.isdir(path := os.path.join(index_dir, name))
+    }
+
+
 def record_base_rows(index_dir: str, rows: dict[str, int]) -> None:
     """Write the build-time row counts of the append-bearing artifacts
-    (called by the index writers) — the baseline freshness drifts
+    (called by :func:`write_index`) — the baseline freshness drifts
     against.  Appends and deletes move the live counts away from
     these; a rebuild resets them."""
     with open(os.path.join(index_dir, BASE_META), "w") as fh:

@@ -17,7 +17,6 @@ and engine-comparable.
 from __future__ import annotations
 
 import math
-import os
 import random
 import warnings
 
@@ -1369,12 +1368,8 @@ def semdedup_index_write(
     survivors, codebook = semdedup_corpus_index(
         corpus, id_col, vec_col, k, n_iter, threshold, two_level=two_level
     )
-    for name, df in {"survivors": survivors, **codebook}.items():
-        df.write.mode("overwrite").parquet(f"{index_dir}/{name}")
-    spark = corpus.sparkSession
-    index_store.record_base_rows(
-        index_dir,
-        {"survivors": spark.read.parquet(f"{index_dir}/survivors").count()},
+    index_store.write_index(
+        {"survivors": survivors, **codebook}, index_dir, index_store.SEM_INDEX_LAYOUT
     )
 
 
@@ -1396,12 +1391,8 @@ def semdedup_incremental_stored(
     pair stream in the per-query plan; byte-identical to
     :func:`semdedup_incremental` with the same fit on the same corpus
     by construction."""
-    survivors = spark.read.parquet(f"{index_dir}/survivors")
-    codebook = {
-        name: spark.read.parquet(f"{index_dir}/{name}")
-        for name, spec in index_store.SEM_INDEX_LAYOUT.items()
-        if spec["key"] is None and os.path.isdir(f"{index_dir}/{name}")
-    }
+    codebook = index_store.read_index(spark, index_dir, index_store.SEM_INDEX_LAYOUT)
+    survivors = codebook.pop("survivors")
     bassigned = _assign_to_codebook(batch, id_col, vec_col, codebook)
     return _probe_keep(bassigned, survivors, id_col, threshold)
 
@@ -1443,7 +1434,9 @@ def semdedup_index_append(
         .join(bv, F.col(id_col) == F.col("__kid"))
         .select("cell", F.col(id_col).alias("corpus_id"), "__cv")
     )
-    kept.write.mode("append").parquet(f"{index_dir}/survivors")
+    index_store.write_index(
+        {"survivors": kept}, index_dir, index_store.SEM_INDEX_LAYOUT, append=True
+    )
     return verdict
 
 
@@ -1624,18 +1617,26 @@ def embedding_neardup_lsh(
 # --------------------------------------------------------------------------
 
 
-def _pq_quantize(v: DataFrame) -> DataFrame:
-    """Add the int64 component quantization ``qv`` (the x23 shared
-    tree ``floor(x · (127/max))`` — one global 1-row broadcast max, so
-    both engines replay the exact same doubles)."""
-    mx = v.agg(F.max(F.array_max(F.transform("emb", F.abs))).alias("m"))
-    return v.join(F.broadcast(mx)).select(
-        *v.columns,
-        # x * (127/m), NOT (x*127)/m — the x23 shared-tree rule
-        F.transform(
-            "emb", lambda x: F.floor(x * (F.lit(127.0) / F.col("m"))).cast("bigint")
-        ).alias("qv"),
-    )
+def _pq_qmax(v: DataFrame) -> DataFrame:
+    """ONE row ``qmax``: the global quantizer max ``max |x|`` over every
+    component of ``emb``."""
+    return v.agg(F.max(F.array_max(F.transform("emb", F.abs))).alias("qmax"))
+
+
+def _pq_qv(emb: str) -> Column:
+    """The int64 component quantization ``qv`` of ``emb`` against the
+    ``qmax`` column in scope — x * (127/qmax), NOT (x*127)/qmax: the
+    x23 shared tree, so both engines replay the exact same doubles."""
+    return F.transform(
+        emb, lambda x: F.floor(x * (F.lit(127.0) / F.col("qmax"))).cast("bigint")
+    ).alias("qv")
+
+
+def _pq_quantize(v: DataFrame, qmax: DataFrame | None = None) -> DataFrame:
+    """Add ``qv`` (:func:`_pq_qv`) to ``v`` against a 1-row broadcast
+    ``qmax`` (:func:`_pq_qmax` of ``v`` unless given)."""
+    mx = _pq_qmax(v) if qmax is None else qmax
+    return v.join(F.broadcast(mx)).select(*v.columns, _pq_qv("emb"))
 
 
 def _pq_codebook(qz: DataFrame, n_codewords: int) -> DataFrame:
@@ -1651,6 +1652,12 @@ def _pq_codebook(qz: DataFrame, n_codewords: int) -> DataFrame:
             )
         ).alias("cb")
     )
+
+
+def _pq_subspace_width(dim: int, m: int) -> int:
+    d4 = dim // m
+    assert d4 * m == dim, "dim must divide into m equal subspaces"
+    return d4
 
 
 def _pq_sqdist_expr(d4: int) -> str:
@@ -1693,7 +1700,7 @@ def _pq_adc_expr(m: int) -> str:
     )
 
 
-def pq_topk(
+def pq_index(
     vectors: DataFrame,
     id_col: str,
     vec_col: str,
@@ -1701,52 +1708,182 @@ def pq_topk(
     dim: int,
     m: int = 4,
     n_codewords: int = 16,
-    n_queries: int = 8,
-    k: int = 10,
+    cell_col: str | None = None,
+) -> dict[str, DataFrame]:
+    """Build the product-quantization index (Jégou et al., "Product
+    Quantization for Nearest Neighbor Search", TPAMI 2011) as a dict of
+    named frames — the ``PQ_INDEX_LAYOUT`` artifacts :func:`pq_topk`
+    probes, whether used in-query or written once by
+    :func:`pq_index_write` and read back with ``index_store.read_index``:
+
+    * ``codebook`` — ONE row ``(cb, qmax)``: the codeword structs plus
+      the global quantizer max, so the query side replays the exact
+      ``floor(x · (127/qmax))`` tree the codes were built with
+      (bit-identical doubles after a parquet round-trip);
+    * ``codes`` — ``(vec_id, [cell,] codes array<int>)``: m small ints
+      per vector, the 100 TB-resident part (4 × 4 bits here vs 64
+      float32 components — the scan that replaces the corpus scan);
+    * ``centroids`` — with ``cell_col`` only: the µ-quantized IVF cell
+      means (:func:`cell_centroids`) the probe ranking needs; the codes
+      then carry their cell, the inverted-file shape.
+
+    Where SQ8 (x23) compresses 4× (float32→int8 per component), PQ
+    stores ``m`` codes per vector: the index that still fits in memory
+    when 100 TB of float32 embeddings cannot.  The quantizer max is one
+    1-row aggregate shared by the quantization and the codebook row;
+    the codebook is one collected row cross-joined broadcast
+    (bounded-BNLJ allowlist), and code assignment runs entirely in
+    whole-stage codegen (nested ``transform``/``aggregate`` HOFs, no
+    shuffle, no UDF).  The per-subspace argmin orders on
+    ``dist · n_codewords + codeword_id`` — the integer-key rule."""
+    d4 = _pq_subspace_width(dim, m)
+    keep = [F.col(id_col).alias("vec_id"), _as_double(vec_col).alias("emb")]
+    if cell_col is not None:
+        keep.insert(1, F.col(cell_col).alias("cell"))
+    v = vectors.select(*keep)
+    qmax = _pq_qmax(v)
+    qz = _pq_quantize(v, qmax)
+    cb = _pq_codebook(qz, n_codewords)
+    index = {
+        "codebook": cb.crossJoin(qmax),
+        # coding joins ``cb`` alone, below which ``qv`` is already
+        # materialized; quantizing here from the (cb, qmax) row instead
+        # would inline ``qv`` into every codeword lambda
+        "codes": qz.crossJoin(F.broadcast(cb)).select(
+            *[c for c in v.columns if c != "emb"],
+            F.expr(_pq_codes_expr(m, d4, n_codewords)).alias("codes"),
+        ),
+    }
+    if cell_col is not None:
+        index["centroids"] = cell_centroids(vectors, cell_col, vec_col)
+    return index
+
+
+def pq_index_write(
+    vectors: DataFrame,
+    id_col: str,
+    vec_col: str,
+    index_dir: str,
+    *,
+    dim: int,
+    m: int = 4,
+    n_codewords: int = 16,
+    cell_col: str | None = None,
+) -> None:
+    """Materialize :func:`pq_index` under ``index_dir`` — the BUILD
+    half of the production split (Jégou et al.'s index lives on disk;
+    x50's in-query coding re-trains it per run, ~90 s of the measured
+    1000x wall).  With ``cell_col`` the codes are hive-partitioned BY
+    CELL (the ``PQ_INDEX_LAYOUT`` rule), so the probe join's dynamic
+    partition pruning opens only the probed cells' files — at 100 TB
+    the per-query scan is the probed posting lists' bytes, not the
+    whole codes artifact filtered after the read."""
+    index_store.write_index(
+        pq_index(
+            vectors, id_col, vec_col,
+            dim=dim, m=m, n_codewords=n_codewords, cell_col=cell_col,
+        ),
+        index_dir,
+        index_store.PQ_INDEX_LAYOUT,
+    )
+
+
+def _pq_scored(
+    index: dict[str, DataFrame],
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    *,
+    dim: int,
+    m: int,
+    n_probe_cells: int | None,
 ) -> DataFrame:
-    """Product-quantization ANN with asymmetric distance computation
-    (ADC), Jégou et al., "Product Quantization for Nearest Neighbor
-    Search" (TPAMI 2011): split each vector into ``m`` subspaces,
-    code every subvector as its nearest codeword, and score candidates
-    by summing per-subspace query→codeword distance-table lookups —
-    the candidate vector itself is never read at query time.  Where
-    SQ8 (x23) compresses 4× (float32→int8 per component), PQ stores
-    ``m`` codes per vector (here 4 × 4 bits): the index that still
-    fits in memory when 100 TB of float32 embeddings cannot.
+    """The ADC-scored candidate stream ``(query_id, neighbor_id,
+    adc_dist)`` of ``queries`` against a :func:`pq_index` dict.
 
-    Engine determinism: components quantize with the x23 shared tree;
-    every distance is an exact int64 sum of squared int differences
-    (order-independent), and the per-subspace argmin orders on
-    ``dist · n_codewords + codeword_id`` — the integer-key rule.
-
-    Scale shape: the codebook is ONE collected row cross-joined
-    broadcast (bounded-BNLJ allowlist); code assignment runs entirely
-    in whole-stage codegen (nested ``transform``/``aggregate`` HOFs,
-    no shuffle, no UDF); the query distance tables are |queries|·m·16
-    ints broadcast; the only wide operation is the final per-query
-    top-k ranking window, which ``rank ≤ k`` plans as WindowGroupLimit
-    (map-side group-limit before the query_id exchange).
-    """
-    d4 = dim // m
-    assert d4 * m == dim, "dim must divide into m equal subspaces"
-    v = vectors.select(F.col(id_col).alias("vec_id"), _as_double(vec_col).alias("emb"))
-    qz = _pq_quantize(v)
-    withcb = qz.crossJoin(F.broadcast(_pq_codebook(qz, n_codewords)))
-    codes = withcb.select(
-        "vec_id", F.expr(_pq_codes_expr(m, d4, n_codewords)).alias("codes")
-    )
-    dtab = withcb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.expr(_pq_dtab_expr(m, d4)).alias("dtab"),
-    )
-    scored = (
-        codes.crossJoin(F.broadcast(dtab))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.expr(_pq_adc_expr(m)).alias("adc_dist"),
+    Queries are quantized from the codebook row's ``qmax`` into
+    |queries|·m·n_codewords distance tables, broadcast.  Flat: every
+    code row is a candidate.  IVF (``n_probe_cells`` set): each query
+    ranks the ``centroids`` by 1e-4-quantized cosine (integer-key rule,
+    cell-id tiebreak) and keeps its ``n_probe_cells`` best cells, whose
+    probe rank rides along as ``__r``; the candidate join then keys the
+    codes BY CELL against that broadcast probe set, so each query
+    touches only its probed posting lists."""
+    d4 = _pq_subspace_width(dim, m)
+    q = (
+        queries.select(
+            F.col(id_col).alias("query_id"), _as_double(vec_col).alias("emb")
         )
+        .crossJoin(F.broadcast(index["codebook"]))
+        .select("query_id", "cb", F.col("emb").alias("__qemb"), _pq_qv("emb"))
+        .select("query_id", "__qemb", F.expr(_pq_dtab_expr(m, d4)).alias("dtab"))
+    )
+    if n_probe_cells is None:
+        cand, probe_rank = index["codes"].crossJoin(F.broadcast(q)), []
+    else:
+        probe_w = Window.partitionBy("query_id").orderBy(
+            F.col("__csimq").desc(), F.col("cell")
+        )
+        probes = (
+            q.crossJoin(F.broadcast(index["centroids"]))
+            .withColumn(
+                "__csimq", sim_q(cosine(F.col("__qemb"), F.col("centroid")))
+            )
+            .withColumn("__r", F.row_number().over(probe_w))
+            .filter(F.col("__r") <= n_probe_cells)
+            .select("query_id", "cell", "__r", "dtab")
+        )
+        cand, probe_rank = index["codes"].join(F.broadcast(probes), "cell"), ["__r"]
+    return cand.filter(F.col("vec_id") != F.col("query_id")).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        *probe_rank,
+        F.expr(_pq_adc_expr(m)).alias("adc_dist"),
+    )
+
+
+def pq_topk(
+    index: dict[str, DataFrame],
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    *,
+    dim: int,
+    m: int = 4,
+    k: int = 10,
+    n_probe_cells: int | None = None,
+) -> DataFrame:
+    """ADC top-k of ``queries`` against a PQ index dict
+    (:func:`pq_index`, in-query or read back from disk): per query, sum
+    the per-subspace query→codeword distance-table lookups of every
+    candidate's codes (asymmetric distance computation) and keep the
+    ``k`` smallest, ``neighbor_id`` breaking ties.  Output
+    ``(query_id, neighbor_id, rank, adc_dist)``; a query never returns
+    itself.
+
+    ``n_probe_cells`` set makes it IVFADC (Jégou et al. §V): the
+    inverted-file coarse quantizer (:func:`ivf_topk`'s cell probe)
+    prunes the SCAN to the probed cells' posting lists while PQ shrinks
+    what each entry STORES to m codes — the production 100 TB ANN
+    shape.  This variant codes raw vectors (IVF-Flat + PQ codes);
+    classic IVFADC codes residuals x − centroid, a recall refinement
+    that changes none of the plumbing.
+
+    Engine determinism: every distance is an exact int64 sum of squared
+    int differences (order-independent), and the probe ranking uses
+    µ-quantized centroids, so both engines rank identical values.  An
+    index read back from disk returns byte-identical rows to the
+    in-query build — one code path — which is what lets the stored
+    registrations share the in-query DuckDB oracle texts verbatim.
+
+    Scale shape: against a stored index the per-query plan holds no
+    training stages (no corpus-wide max aggregate, no code assignment;
+    the embedding column is never read), and the only wide operation is
+    the final per-query ranking window, which ``rank ≤ k`` plans as
+    WindowGroupLimit (map-side group-limit before the query_id
+    exchange)."""
+    scored = _pq_scored(
+        index, queries, id_col, vec_col, dim=dim, m=m, n_probe_cells=n_probe_cells
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("adc_dist").asc(), F.col("neighbor_id")
@@ -1771,91 +1908,52 @@ def ivfpq_recall_dial(
     k: int = 10,
     nprobes: tuple[int, ...] = (1, 2, 4),
 ) -> DataFrame:
-    """Recall@k of the IVFADC index (:func:`ivfpq_topk`) against the
-    exact cosine top-k, graded at several ``nprobe`` settings in ONE
-    query — the production tuning dial: IVF pruning COMPOUNDS PQ error
-    (Jégou et al. §V report exactly this recall-vs-nprobe trade), so
-    the pair must be graded together (x52 grades flat PQ only).
+    """Recall@k of the IVFADC index (:func:`pq_topk` with
+    ``n_probe_cells``) against the exact cosine top-k, graded at several
+    ``nprobe`` settings in ONE query — the production tuning dial: IVF
+    pruning COMPOUNDS PQ error (Jégou et al. §V report exactly this
+    recall-vs-nprobe trade), so the pair must be graded together (x52
+    grades flat PQ only).
 
     Single-pass shape: candidates are ADC-scored ONCE against the
-    widest probe set (max nprobe cells per query, each candidate row
-    carrying its cell's probe rank — cells are disjoint, so a neighbor
-    has exactly one rank per query); each dial setting is then a
-    rank-filtered top-k window over that one scored stream, never a
-    re-scan.  Recall is exact integer ppm over the quantized-ranked
-    exact top-k (the x30/x52 recipe); both comparison inputs are
-    top-k-bounded.
+    widest probe set (:func:`_pq_scored` with max nprobe cells per
+    query, each candidate row carrying its cell's probe rank — cells
+    are disjoint, so a neighbor has exactly one rank per query); each
+    dial setting is then a rank-filtered top-k window over that one
+    scored stream, never a re-scan.  Recall is exact integer ppm over
+    the quantized-ranked exact top-k (the x30/x52 recipe); both
+    comparison inputs are top-k-bounded.
 
     Output: ``(query_id, nprobe, n_hit, recall_ppm)`` — monotone
     non-decreasing in nprobe by construction (a wider probe set only
     adds candidates)."""
-    d4 = dim // m
-    assert d4 * m == dim, "dim must divide into m equal subspaces"
-    max_probe = max(nprobes)
-    v = vectors.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(cell_col).alias("cell"),
-        _as_double(vec_col).alias("emb"),
-    )
-    qz = _pq_quantize(v)
-    withcb = qz.crossJoin(F.broadcast(_pq_codebook(qz, n_codewords)))
-    codes = withcb.select(
-        "vec_id", "cell", F.expr(_pq_codes_expr(m, d4, n_codewords)).alias("codes")
-    )
-    q = withcb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb").alias("__qemb"),
-        F.expr(_pq_dtab_expr(m, d4)).alias("dtab"),
-    )
-    cents = cell_centroids(vectors, cell_col, vec_col)
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.col("__csimq").desc(), F.col("cell")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("__csimq", sim_q(cosine(F.col("__qemb"), F.col("centroid"))))
-        .withColumn("probe_rank", F.row_number().over(probe_w))
-        .filter(F.col("probe_rank") <= max_probe)
-        .select("query_id", "cell", "probe_rank", "dtab")
-    )
-    scored = (
-        codes.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "probe_rank",
-            F.expr(_pq_adc_expr(m)).alias("adc_dist"),
-        )
-    )
-    dial = scored.join(
-        F.broadcast(
-            vectors.sparkSession.createDataFrame(
-                [(n,) for n in nprobes], "nprobe int"
-            )
+    queries = vectors.filter(F.col(id_col) < n_queries)
+    scored = _pq_scored(
+        pq_index(
+            vectors, id_col, vec_col,
+            dim=dim, m=m, n_codewords=n_codewords, cell_col=cell_col,
         ),
-        F.col("probe_rank") <= F.col("nprobe"),
+        queries, id_col, vec_col, dim=dim, m=m, n_probe_cells=max(nprobes),
     )
+    np_dim = vectors.sparkSession.createDataFrame(
+        [(n,) for n in nprobes], "nprobe int"
+    )
+    dial = scored.join(F.broadcast(np_dim), F.col("__r") <= F.col("nprobe"))
     w = Window.partitionBy("query_id", "nprobe").orderBy(
         F.col("adc_dist").asc(), F.col("neighbor_id")
     )
     pq_topk_rows = (
-        dial.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") <= k)
+        dial.withColumn("__rank", F.row_number().over(w))
+        .filter(F.col("__rank") <= k)
         .select("query_id", "nprobe", "neighbor_id", F.lit(1).alias("__hit"))
     )
     exact = cosine_topk(
         vectors.select(F.col(id_col), F.col(vec_col)),
         id_col,
         vec_col,
-        queries=vectors.filter(F.col(id_col) < n_queries).select(
-            F.col(id_col), F.col(vec_col)
-        ),
+        queries=queries.select(F.col(id_col), F.col(vec_col)),
         k=k,
     ).select("query_id", "neighbor_id")
-    np_dim = vectors.sparkSession.createDataFrame(
-        [(n,) for n in nprobes], "nprobe int"
-    )
     return (
         exact.crossJoin(F.broadcast(np_dim))
         .join(pq_topk_rows, ["query_id", "nprobe", "neighbor_id"], "left")
@@ -1867,292 +1965,6 @@ def ivfpq_recall_dial(
             "n_hit",
             F.expr(f"n_hit * 1000000 DIV {k}").alias("recall_ppm"),
         )
-    )
-
-
-def ivfpq_topk(
-    vectors: DataFrame,
-    id_col: str,
-    vec_col: str,
-    cell_col: str,
-    *,
-    dim: int,
-    m: int = 4,
-    n_codewords: int = 16,
-    n_queries: int = 8,
-    k: int = 10,
-    n_probe_cells: int = 2,
-) -> DataFrame:
-    """IVFADC (Jégou et al. §V): the inverted-file coarse quantizer
-    (:func:`ivf_topk`'s cell probe) composed with PQ/ADC scoring — the
-    production 100 TB ANN shape, where IVF prunes the SCAN to the
-    probed cells' posting lists and PQ shrinks what each posting-list
-    entry STORES to m codes.  This variant codes raw vectors (IVF-Flat
-    + PQ codes); classic IVFADC codes residuals x − centroid, a recall
-    refinement that changes none of the plumbing measured here.
-
-    Cell probe ranking uses the 1e-4-quantized centroid cosine
-    (integer-key rule — stricter than x3e's raw-double probe order);
-    centroids are µ-quantized exact means (:func:`cell_centroids`), so
-    both engines rank identical doubles.  ADC is exact int64.
-
-    Scale shape: centroids and codebook are tiny broadcasts; coding is
-    map-side HOFs; the candidate join shuffles BY CELL ID only (the
-    inverted-file trade: each query touches |probes|/|cells| of the
-    corpus), then the per-query top-k window group-limits map-side.
-    """
-    d4 = dim // m
-    assert d4 * m == dim, "dim must divide into m equal subspaces"
-    v = vectors.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(cell_col).alias("cell"),
-        _as_double(vec_col).alias("emb"),
-    )
-    qz = _pq_quantize(v)
-    withcb = qz.crossJoin(F.broadcast(_pq_codebook(qz, n_codewords)))
-    codes = withcb.select(
-        "vec_id", "cell", F.expr(_pq_codes_expr(m, d4, n_codewords)).alias("codes")
-    )
-    q = withcb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb").alias("__qemb"),
-        F.expr(_pq_dtab_expr(m, d4)).alias("dtab"),
-    )
-    cents = cell_centroids(vectors, cell_col, vec_col)
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.col("__csimq").desc(), F.col("cell")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("__csimq", sim_q(cosine(F.col("__qemb"), F.col("centroid"))))
-        .withColumn("__r", F.row_number().over(probe_w))
-        .filter(F.col("__r") <= n_probe_cells)
-        .select("query_id", "cell", "dtab")
-    )
-    scored = (
-        codes.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.expr(_pq_adc_expr(m)).alias("adc_dist"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adc_dist")
-    )
-
-
-def pq_index_write(
-    vectors: DataFrame,
-    id_col: str,
-    vec_col: str,
-    index_dir: str,
-    *,
-    dim: int,
-    m: int = 4,
-    n_codewords: int = 16,
-    cell_col: str | None = None,
-) -> None:
-    """Materialize the PQ index :func:`pq_topk_stored` queries — the
-    BUILD half of the production split (Jégou et al.'s index lives on
-    disk; x50's in-query coding re-trains it per run, ~90 s of the
-    measured 1000x wall).  Writes under ``index_dir``:
-
-    * ``codes`` — ``(vec_id, codes array<int>)``: m small ints per
-      vector, the 100 TB-resident part (4 × 4 bits here vs 64 float32
-      components — the scan that replaces the corpus scan);
-    * ``codebook`` — ONE row ``(cb, qmax)``: the codeword structs plus
-      the global quantizer max, so the query side replays the exact
-      ``floor(x · (127/qmax))`` tree the codes were built with
-      (bit-identical doubles after the parquet round-trip).
-
-    With ``cell_col`` the index is INVERTED-FILE shaped for
-    :func:`ivfpq_topk_stored`: codes carry their IVF cell and a third
-    artifact, ``centroids`` (the µ-quantized cell means the probe
-    ranking needs), is written alongside.  The codes are
-    hive-partitioned BY CELL (``partitionBy``), so the probe join's
-    dynamic partition pruning opens only the probed cells' files — at
-    100 TB the per-query scan is the probed posting lists' bytes, not
-    the whole codes artifact filtered after the read.
-
-    Same deterministic construction as :func:`pq_topk` /
-    :func:`ivfpq_topk` — a stored index queried by the ``*_stored``
-    twins returns byte-identical rows to the in-query forms, which is
-    what lets x50b/x51b share x50/x51's DuckDB oracle texts verbatim."""
-    d4 = dim // m
-    assert d4 * m == dim, "dim must divide into m equal subspaces"
-    keep = [F.col(id_col).alias("vec_id"), _as_double(vec_col).alias("emb")]
-    if cell_col is not None:
-        keep.insert(1, F.col(cell_col).alias("cell"))
-    v = vectors.select(*keep)
-    qz = _pq_quantize(v)
-    cbrow = _pq_codebook(qz, n_codewords)
-    qmax = v.agg(F.max(F.array_max(F.transform("emb", F.abs))).alias("qmax"))
-    cbrow.crossJoin(qmax).write.mode("overwrite").parquet(
-        f"{index_dir}/codebook"
-    )
-    withcb = qz.crossJoin(F.broadcast(cbrow))
-    code_cols = ["vec_id"] + (["cell"] if cell_col is not None else [])
-    codes_df = withcb.select(
-        *code_cols, F.expr(_pq_codes_expr(m, d4, n_codewords)).alias("codes")
-    )
-    codes_writer = codes_df.write.mode("overwrite")
-    if cell_col is not None:
-        # cell-partitioned layout: each posting list is its own
-        # directory, so the *_stored probes prune at the FILE level
-        codes_writer = codes_writer.partitionBy("cell")
-    codes_writer.parquet(f"{index_dir}/codes")
-    if cell_col is not None:
-        cell_centroids(vectors, cell_col, vec_col).write.mode(
-            "overwrite"
-        ).parquet(f"{index_dir}/centroids")
-    spark = vectors.sparkSession
-    index_store.record_base_rows(
-        index_dir,
-        {"codes": spark.read.parquet(f"{index_dir}/codes").count()},
-    )
-
-
-def pq_topk_stored(
-    spark,
-    index_dir: str,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    *,
-    dim: int,
-    m: int = 4,
-    k: int = 10,
-) -> DataFrame:
-    """ADC top-k against a STORED PQ index (:func:`pq_index_write`) —
-    the recurring 100 TB read path: build once, probe forever.
-
-    Per-query cost: one scan of the ``codes`` parquet (m ints/row —
-    the embedding column is never read), one 1-row codebook broadcast,
-    |queries| distance tables computed from the STORED quantizer max
-    (no corpus-wide max aggregate, no code assignment — the training
-    stages x50 re-runs in-query are absent from this plan, which the
-    plan gate pins), and the rank ≤ k window (WindowGroupLimit).
-    Results are byte-identical to :func:`pq_topk` on the same corpus
-    by construction."""
-    d4 = dim // m
-    assert d4 * m == dim, "dim must divide into m equal subspaces"
-    cb = spark.read.parquet(f"{index_dir}/codebook")  # 1 row: (cb, qmax)
-    codes = spark.read.parquet(f"{index_dir}/codes")
-    q = (
-        queries.select(
-            F.col(id_col).alias("query_id"), _as_double(vec_col).alias("emb")
-        )
-        .crossJoin(F.broadcast(cb))
-        .select(
-            "query_id",
-            "cb",
-            # the stored quantizer tree: x * (127/qmax), NOT (x*127)/qmax
-            F.transform(
-                "emb",
-                lambda x: F.floor(x * (F.lit(127.0) / F.col("qmax"))).cast(
-                    "bigint"
-                ),
-            ).alias("qv"),
-        )
-        .select("query_id", F.expr(_pq_dtab_expr(m, d4)).alias("dtab"))
-    )
-    scored = (
-        codes.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.expr(_pq_adc_expr(m)).alias("adc_dist"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adc_dist")
-    )
-
-
-def ivfpq_topk_stored(
-    spark,
-    index_dir: str,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    *,
-    dim: int,
-    m: int = 4,
-    k: int = 10,
-    n_probe_cells: int = 2,
-) -> DataFrame:
-    """IVFADC top-k against a STORED inverted-file PQ index
-    (:func:`pq_index_write` with ``cell_col``) — :func:`pq_topk_stored`
-    plus the IVF pruning: rank the STORED µ-quantized centroids per
-    query (quantized-cosine, integer-key rule), then the candidate
-    join keys the stored codes BY CELL against the broadcast probe
-    set, so each query touches only its probed posting lists.  No
-    training stages in the per-query plan; byte-identical to
-    :func:`ivfpq_topk` on the same corpus by construction."""
-    d4 = dim // m
-    assert d4 * m == dim, "dim must divide into m equal subspaces"
-    cb = spark.read.parquet(f"{index_dir}/codebook")  # 1 row: (cb, qmax)
-    codes = spark.read.parquet(f"{index_dir}/codes")  # (vec_id, cell, codes)
-    cents = spark.read.parquet(f"{index_dir}/centroids")  # (cell, centroid)
-    q = (
-        queries.select(
-            F.col(id_col).alias("query_id"), _as_double(vec_col).alias("emb")
-        )
-        .crossJoin(F.broadcast(cb))
-        .select(
-            "query_id",
-            "cb",
-            F.col("emb").alias("__qemb"),
-            F.transform(
-                "emb",
-                lambda x: F.floor(x * (F.lit(127.0) / F.col("qmax"))).cast(
-                    "bigint"
-                ),
-            ).alias("qv"),
-        )
-        .select(
-            "query_id", "__qemb", F.expr(_pq_dtab_expr(m, d4)).alias("dtab")
-        )
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.col("__csimq").desc(), F.col("cell")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("__csimq", sim_q(cosine(F.col("__qemb"), F.col("centroid"))))
-        .withColumn("__r", F.row_number().over(probe_w))
-        .filter(F.col("__r") <= n_probe_cells)
-        .select("query_id", "cell", "dtab")
-    )
-    scored = (
-        codes.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.expr(_pq_adc_expr(m)).alias("adc_dist"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adc_dist")
     )
 
 

@@ -1122,21 +1122,6 @@ _PQ_QUERIES = 8
 _PQ_TOPK = 10
 
 
-def x50_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ADC top-10 (operators/similarity.py:
-    pq_topk): the memory-bound ANN step past SQ8 — m=4 4-bit codes per
-    vector instead of 64 int8 components, with query-time scoring done
-    entirely from broadcast distance tables.  Candidate coding runs in
-    whole-stage codegen over a one-row broadcast codebook; exact int64
-    distances end-to-end, so DuckDB replays the full path."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.pq_topk(
-        emb, "vec_id", "embedding",
-        dim=_PQ_DIM, m=_PQ_M, n_codewords=_PQ_CODEWORDS,
-        n_queries=_PQ_QUERIES, k=_PQ_TOPK,
-    )
-
-
 #: stored-PQ-index root: build-once cache keyed on the embedding file
 #: and the build params (index_store.stored_index).  /tmp because the
 #: testdata dirs are read-only; in production this is a lakehouse table
@@ -1144,58 +1129,72 @@ def x50_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQ_INDEX_ROOT = "/tmp/spark_graft_pq_index"
 
 
-def _pq_stored_index(
-    spark: SparkSession, sf_dir: str, cell_col: str | None
-) -> str:
-    """The stored PQ index of the whole embedding table (with IVF cells
-    when ``cell_col`` is set), built once per corpus file."""
+def _pq_topk(
+    spark: SparkSession, sf_dir: str, *, cell_col: str | None, stored: bool
+) -> DataFrame:
+    """ADC top-10 of the first ``_PQ_QUERIES`` vectors against the PQ
+    index of the whole embedding table — IVFADC over 2 probed cells
+    when ``cell_col`` is set.  The index dict is built in-query
+    (x50/x51) or read from the stored index, built once per corpus file
+    (x50b/x51b); both feed the same probe."""
+    emb = load_table(spark, sf_dir, "embeddings")
     params = {
         "dim": _PQ_DIM, "m": _PQ_M, "n_codewords": _PQ_CODEWORDS,
         "cell_col": cell_col,
     }
-    return index_store.stored_index(
-        _PQ_INDEX_ROOT, "ivfpq" if cell_col else "pq",
-        [f"{sf_dir}/embeddings.parquet"], params,
-        lambda d: similarity.pq_index_write(
-            load_table(spark, sf_dir, "embeddings"), "vec_id", "embedding", d,
-            **params,
-        ),
+    if stored:
+        idx = index_store.stored_index(
+            _PQ_INDEX_ROOT, "ivfpq" if cell_col else "pq",
+            [f"{sf_dir}/embeddings.parquet"], params,
+            lambda d: similarity.pq_index_write(
+                emb, "vec_id", "embedding", d, **params
+            ),
+        )
+        index = index_store.read_index(spark, idx, index_store.PQ_INDEX_LAYOUT)
+    else:
+        index = similarity.pq_index(emb, "vec_id", "embedding", **params)
+    return similarity.pq_topk(
+        index, emb.filter(F.col("vec_id") < _PQ_QUERIES), "vec_id", "embedding",
+        dim=_PQ_DIM, m=_PQ_M, k=_PQ_TOPK,
+        n_probe_cells=2 if cell_col else None,
     )
+
+
+def x50_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Product-quantization ADC top-10 (operators/similarity.py:
+    pq_index + pq_topk): the memory-bound ANN step past SQ8 — m=4
+    4-bit codes per vector instead of 64 int8 components, with
+    query-time scoring done entirely from broadcast distance tables.
+    Candidate coding runs in whole-stage codegen over a one-row
+    broadcast codebook; exact int64 distances end-to-end, so DuckDB
+    replays the full path."""
+    return _pq_topk(spark, sf_dir, cell_col=None, stored=False)
 
 
 def x50b_pq_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """x50 split into the production BUILD/QUERY halves: the PQ codes
     and codebook are materialized to parquet ONCE per corpus
     (operators/similarity.py:pq_index_write — cached by
-    index_store.stored_index on the embedding file and the PQ params) and the query scans the STORED codes (pq_topk_stored):
-    m=4 ints per row instead of 64 floats, distance tables from the
-    stored quantizer max, no codebook-training stages in the per-query
-    plan (plan-gated).  This is the real 100 TB ANN read path — build
-    once, probe forever; x50's in-query coding is the oracle-friendly
-    single-statement form.  Output is byte-identical to x50 by
-    construction, so this query shares x50's DuckDB oracle verbatim."""
-    idx = _pq_stored_index(spark, sf_dir, cell_col=None)
-    queries = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") < _PQ_QUERIES
-    )
-    return similarity.pq_topk_stored(
-        spark, idx, queries, "vec_id", "embedding",
-        dim=_PQ_DIM, m=_PQ_M, k=_PQ_TOPK,
-    )
+    index_store.stored_index on the embedding file and the PQ params)
+    and the query probes the STORED index frames with the same
+    pq_topk: m=4 ints per row instead of 64 floats, distance tables
+    from the stored quantizer max, no codebook-training stages in the
+    per-query plan (plan-gated).  This is the real 100 TB ANN read
+    path — build once, probe forever; x50's in-query coding is the
+    oracle-friendly single-statement form.  Output is byte-identical
+    to x50 by construction, so this query shares x50's DuckDB oracle
+    verbatim."""
+    return _pq_topk(spark, sf_dir, cell_col=None, stored=True)
 
 
 def x51_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVFADC (operators/similarity.py:ivfpq_topk): x3e's inverted-file
-    cell probe composed with x50's PQ/ADC scoring — IVF prunes the scan
-    to 2 probed cells per query, PQ shrinks every posting-list entry to
-    m=4 codes.  The production 100 TB ANN shape; shares the PQ oracle
-    CTE chain with x50 and the label-cell centroid chain with x3e."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.ivfpq_topk(
-        emb, "vec_id", "embedding", "label",
-        dim=_PQ_DIM, m=_PQ_M, n_codewords=_PQ_CODEWORDS,
-        n_queries=_PQ_QUERIES, k=_PQ_TOPK, n_probe_cells=2,
-    )
+    """IVFADC (operators/similarity.py:pq_topk with n_probe_cells):
+    x3e's inverted-file cell probe composed with x50's PQ/ADC scoring —
+    IVF prunes the scan to 2 probed cells per query, PQ shrinks every
+    posting-list entry to m=4 codes.  The production 100 TB ANN shape;
+    shares the PQ oracle CTE chain with x50 and the label-cell centroid
+    chain with x3e."""
+    return _pq_topk(spark, sf_dir, cell_col="label", stored=False)
 
 
 def x51b_ivfpq_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1207,14 +1206,7 @@ def x51b_ivfpq_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast probe set — each query touches only its probed posting
     lists, and no training stages appear in the per-query plan.
     Byte-identical to x51 by construction → shares x51's oracle."""
-    idx = _pq_stored_index(spark, sf_dir, cell_col="label")
-    queries = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") < _PQ_QUERIES
-    )
-    return similarity.ivfpq_topk_stored(
-        spark, idx, queries, "vec_id", "embedding",
-        dim=_PQ_DIM, m=_PQ_M, k=_PQ_TOPK, n_probe_cells=2,
-    )
+    return _pq_topk(spark, sf_dir, cell_col="label", stored=True)
 
 
 def x52_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:

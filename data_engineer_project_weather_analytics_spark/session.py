@@ -20,7 +20,9 @@ at runtime when the data is 1000x larger.
 from __future__ import annotations
 
 import os
+import warnings
 
+from pyspark.errors import AnalysisException, IllegalArgumentException
 from pyspark.sql import SparkSession
 
 #: Conf entries safe to set on a live session (no restart needed).
@@ -83,10 +85,16 @@ def configure(spark: SparkSession) -> SparkSession:
     for k, v in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            # A conf may be marked static in some deployments; the
-            # engine degrades gracefully (catalog falls back).
-            pass
+        except (AnalysisException, IllegalArgumentException) as exc:
+            # Spark rejected the conf (static in this deployment, or an
+            # invalid value): keep applying the rest, but say so — a
+            # rejected nanosAsLong or UTC timezone changes every
+            # timestamp result.
+            warnings.warn(
+                f"session conf {k}={v!r} was rejected: {exc}",
+                RuntimeWarning,
+                stacklevel=2,
+            )
     _ship_package(spark)
     spark._data_engineer_project_weather_analytics_spark_configured = True
     return spark

@@ -260,3 +260,17 @@ def test_duplicate_key_in_one_batch_survivor_is_deterministic(spark):
     assert results[0] == results[1]
     # the tiebreak (temp DESC first) must keep the hotter reading
     assert list(results[0].values()) == [hot["main"]["temp"]]
+
+
+def test_unknown_cities_mode_raises_in_both_replays(spark, tmp_path):
+    """``run_etl`` and its storage-free twin ``etl_final_state`` share
+    one view policy: a misspelled ``cities_mode`` is an error in both,
+    never a silent fall-through to insert-if-absent semantics."""
+    from data_engineer_project_weather_analytics_spark.etl import etl_final_state
+
+    rounds = [_raw(spark, CURRENT_DOCS)]
+    with pytest.raises(ValueError, match="bogus"):
+        etl_final_state(spark, rounds, cities_mode="bogus")
+    cities_t, current_t = _tables(spark, tmp_path)
+    with pytest.raises(ValueError, match="bogus"):
+        run_etl(spark, rounds, cities_t, current_t, cities_mode="bogus")

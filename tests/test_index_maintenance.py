@@ -6,6 +6,9 @@ families that own per-batch admission state (LSH signatures, SemDeDup
 survivors).  The PQ index has no admission semantics (it indexes
 everything), so its lifecycle is build/rebuild only."""
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from data_engineer_project_weather_analytics_spark.operators import dedup, similarity
@@ -390,8 +393,9 @@ def test_delete_from_index_pq_removes_neighbor(spark, tmp_path):
     def neighbors():
         return {
             r.neighbor_id
-            for r in similarity.pq_topk_stored(
-                spark, idx, queries, "vec_id", "emb", dim=4, m=2, k=8
+            for r in similarity.pq_topk(
+                index_store.read_index(spark, idx, index_store.PQ_INDEX_LAYOUT),
+                queries, "vec_id", "emb", dim=4, m=2, k=8,
             ).collect()
         }
 
@@ -403,6 +407,54 @@ def test_delete_from_index_pq_removes_neighbor(spark, tmp_path):
     assert set(stats) == {"codes"}
     assert stats["codes"] == (8, 7)
     assert 5 not in neighbors()
+
+
+@pytest.mark.parametrize("cell_col", [None, "cell"], ids=["flat", "ivf"])
+def test_pq_index_round_trips_through_the_index_store(spark, tmp_path, cell_col):
+    """The in-query PQ index and the stored one are the same frames:
+    ``pq_index`` equals what ``read_index`` returns after
+    ``pq_index_write``, artifact for artifact and row for row (flat,
+    and IVF with its ``centroids``).  The codes are hive-partitioned by
+    ``cell`` only in the IVF case."""
+    from data_engineer_project_weather_analytics_spark.operators import index_store
+
+    vecs = spark.createDataFrame(
+        [
+            (i, i % 3, [float(i % 3) + 0.1 * i, 1.0 - 0.05 * i, 0.5, 0.25])
+            for i in range(12)
+        ],
+        "vec_id bigint, cell int, emb array<double>",
+    )
+    params = {"dim": 4, "m": 2, "n_codewords": 4, "cell_col": cell_col}
+    built = similarity.pq_index(vecs, "vec_id", "emb", **params)
+    idx = str(tmp_path / "pq")
+    similarity.pq_index_write(vecs, "vec_id", "emb", idx, **params)
+    stored = index_store.read_index(spark, idx, index_store.PQ_INDEX_LAYOUT)
+
+    assert set(stored) == set(built)
+    assert set(built) == (
+        {"codebook", "codes", "centroids"} if cell_col else {"codebook", "codes"}
+    )
+    for name, df in built.items():
+        cols = sorted(df.columns)
+        assert sorted(stored[name].columns) == cols, name
+        assert sorted(map(tuple, stored[name].select(*cols).collect())) == sorted(
+            map(tuple, df.select(*cols).collect())
+        ), name
+    cell_dirs = [d for d in os.listdir(f"{idx}/codes") if d.startswith("cell=")]
+    assert (len(cell_dirs) == 3) if cell_col else not cell_dirs
+
+
+def test_lsh_index_sigs_are_partitioned_by_band(spark, tmp_path):
+    """``write_index`` applies the LSH layout's partition key: one
+    ``band=`` directory per band for ``sigs``, none for ``sets``."""
+    idx = str(tmp_path / "lsh")
+    corpus = _docs(spark, [(1, BASE), (2, "one two three four five six seven")])
+    dedup.lsh_index_write(corpus, "doc_id", "text", idx, n_bands=4)
+    assert sorted(d for d in os.listdir(f"{idx}/sigs") if "=" in d) == [
+        "band=0", "band=1", "band=2", "band=3"
+    ]
+    assert not [d for d in os.listdir(f"{idx}/sets") if "=" in d]
 
 
 def test_recover_index_repairs_every_crash_state(spark, tmp_path):
