@@ -976,9 +976,9 @@ def main() -> None:
                 F.col("vec_id").alias("__vid"),
                 similarity._as_double("embedding").alias("__v"),
             )
-            assigned, fmap, occ = similarity._kmeans_fit_two_level(cv, k)
-            fmap = fmap.persist()
-            occ = occ.persist()
+            assigned, codebook = similarity._kmeans_fit(cv, k, two_level=True)
+            fmap = codebook["fmap"].persist()
+            occ = codebook["occ"].persist()
             n_occ = occ.count()
             fmap.count()
             a = assigned.persist()
@@ -989,7 +989,6 @@ def main() -> None:
             bass = similarity._batch_assign_two_level(
                 bv, fmap, occ,
                 broadcast_fine=k <= similarity.FINE_CODEBOOK_BROADCAST_MAX_K,
-                keep_coarse=True,
             ).persist()
             try:
                 per_coarse = a.groupBy("coarse").agg(
@@ -1066,8 +1065,8 @@ def main() -> None:
             emb = load_table(spark, sf_dir, "embeddings")
             n = emb.count()
             k = similarity.recommended_kmeans_k(n)
-            a = similarity.kmeans_assign_two_level(
-                emb, "vec_id", "embedding", k=k, keep_coarse=True
+            a = similarity.kmeans_assign(
+                emb, "vec_id", "embedding", k=k, two_level=True, keep_coarse=True
             ).persist()
             try:
                 n_occ = a.select("coarse_id").distinct().count()

@@ -108,8 +108,8 @@ def measure(spark, copies: int) -> dict:
     # the x54c artifacts (survivors + BOTH codebooks), built once per
     # replica and cached (r12, VERDICT r11 task 5): the stream no
     # longer pays the in-harness fit, and the probe assigns via the
-    # TWO-LEVEL literal route (with_two_level_cell_assignment, ~2·√k
-    # cosines per row) instead of the flat k-wide argmax that
+    # TWO-LEVEL literal route (with_cell_assignment on the stored
+    # fmap/occ codebook, ~2·√k cosines per row) instead of the flat k-wide argmax that
     # dominated the r11 100x point (104.6 rows/s at k=639).
     idx = index_store.stored_index(
         WORK_DIR, f"semidx_x{copies}", [f"{rep_dir}/embeddings.parquet"],
@@ -118,14 +118,9 @@ def measure(spark, copies: int) -> dict:
             corpus, "vec_id", "embedding", d, k=None, two_level=True
         ),
     )
-    index = index_store.read_index(spark, idx, index_store.SEM_INDEX_LAYOUT)
-    survivors = index["survivors"]
-    fmap_rows = [
-        (r["cell"], list(r["centroid"]), r["coarse"])
-        for r in index["fmap"].collect()
-    ]
-    occ_rows = [(r["coarse"], list(r["ccent"])) for r in index["occ"].collect()]
-    k = len(fmap_rows)
+    codebook = index_store.read_index(spark, idx, index_store.SEM_INDEX_LAYOUT)
+    survivors = codebook.pop("survivors")
+    k = codebook["fmap"].count()
     # the stream's two-level seed assignment is bit-identical to the
     # fit's final pass (pinned by the x54c stream≡batch test), so the
     # stored survivors' own cell IS the stream's state accounting
@@ -186,8 +181,7 @@ def measure(spark, copies: int) -> dict:
         q = (
             streaming_semdedup_probe(
                 stream, "vec_id", "embedding",
-                max_cell=max_cell, seed_col="is_seed",
-                fmap_rows=fmap_rows, occ_rows=occ_rows,
+                codebook, max_cell=max_cell, seed_col="is_seed",
             )
             .writeStream.foreachBatch(_sink)
             .option("checkpointLocation", ckpt)

@@ -527,6 +527,12 @@ def _pin_codebook(df: DataFrame, single_partition: bool = True) -> DataFrame:
     return pinned.localCheckpoint(eager=False)
 
 
+def _vec_frame(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """``(__vid, __v)`` — the id and double vector every k-means step
+    reads."""
+    return df.select(F.col(id_col).alias("__vid"), _as_double(vec_col).alias("__v"))
+
+
 def _batch_assign(v: DataFrame, cents: DataFrame) -> DataFrame:
     """One Lloyd assignment pass of ``v`` (``__vid``, ``__v``) against a
     broadcast codebook ``cents`` (``cell``, ``centroid``): argmax over
@@ -562,15 +568,42 @@ def _batch_assign(v: DataFrame, cents: DataFrame) -> DataFrame:
 
 
 def _kmeans_fit(
-    v: DataFrame, k: int, n_iter: int
-) -> tuple[DataFrame, DataFrame]:
-    """Deterministic Lloyd loop over ``v`` (``__vid``, ``__v``); returns
-    ``(assigned, cents)`` where ``assigned`` is the final per-vector
-    assignment (``__vid``, ``__v``, ``cell``, ``__cs``) and ``cents``
-    the codebook THAT ASSIGNMENT used (the centroids after ``n_iter-1``
-    updates — what an incremental consumer must probe against to be
-    consistent with the stored assignment).  Semantics and determinism
-    contract documented on :func:`kmeans_assign`, which wraps this."""
+    v: DataFrame,
+    k: int,
+    n_iter: int = KMEANS_ITERS,
+    *,
+    two_level: bool = False,
+    coarse_k: int | None = None,
+    broadcast_fine: bool | None = None,
+) -> tuple[DataFrame, dict[str, DataFrame]]:
+    """The deterministic Lloyd loop over ``v`` (``__vid``, ``__v``) —
+    the one engine behind :func:`kmeans_assign` and the SemDeDup index
+    (semantics and determinism contract documented on
+    :func:`kmeans_assign`).  Returns ``(assigned, codebook)``:
+
+    - ``assigned`` is the final per-vector assignment (``__vid``,
+      ``__v``, ``cell``, ``__cs``; two-level also ``coarse``);
+    - ``codebook`` is the dict of frames the FINAL assignment pass
+      consumed (the centroids after ``n_iter-1`` updates — what an
+      incremental consumer must probe against to be consistent with the
+      stored assignment): ``{"cents"}`` (``cell, centroid``) flat, or
+      ``{"fmap", "occ"}`` two-level — the fine codebook with its coarse
+      routing (``cell, centroid, coarse``) and the occupied-coarse
+      codebook (``coarse, ccent``).  Its keys are the stored artifact
+      names (``index_store.SEM_INDEX_LAYOUT``).
+
+    Each pass assigns through :func:`_assign_to_codebook`, the same
+    step a batch probe runs against a stored codebook; the two-level
+    pass first routes every fine centroid to its nearest coarse
+    centroid (codebook-sized work) and rebuilds the occupied-coarse
+    codebook from the routing."""
+    if coarse_k is None:
+        coarse_k = max(2, math.isqrt(k))
+    if broadcast_fine is None:
+        broadcast_fine = k <= FINE_CODEBOOK_BROADCAST_MAX_K
+    # the flat codebook is always broadcast whole; the two-level fine
+    # codebook keeps its sharded layout past the broadcast ceiling
+    single_partition = broadcast_fine or not two_level
     h = F.conv(
         F.substring(F.md5(F.col("__vid").cast("string")), 1, 8), 16, 10
     ).cast("long")
@@ -582,14 +615,65 @@ def _kmeans_fit(
     cents = _pin_codebook(
         seeds.select(
             F.row_number().over(w).alias("cell"), F.col("__v").alias("centroid")
-        )
+        ),
+        single_partition=single_partition,
     )
-    assigned = None
+    # the first coarse_k fine seeds double as the coarse seeds
+    coarse = cents.filter(F.col("cell") <= coarse_k).select(
+        F.col("cell").alias("coarse"), F.col("centroid").alias("ccent")
+    )
+    assigned = codebook = None
     for it in range(n_iter):
-        assigned = _batch_assign(v, cents)
+        if two_level:
+            # route each fine centroid to its nearest coarse centroid
+            # (k × √k scored rows).  fmap is pinned too: it is read
+            # twice per pass (occ + the fine join), and unpinned its
+            # references re-execute at every use (~1-2.5 s per auto
+            # query, probed).  occ stays LAZY — one tiny aggregate over
+            # the pinned fmap leaf, where a pin would cost a whole
+            # Spark job per iteration for nothing (probed both ways).
+            fbest = F.struct(F.col("__cs").alias("s"), (-F.col("coarse")).alias("nc"))
+            fmap = _pin_codebook(
+                cents.withColumn("__fn", l2_norm(F.col("centroid")))
+                .crossJoin(
+                    F.broadcast(coarse.withColumn("__ccn", l2_norm(F.col("ccent"))))
+                )
+                .select(
+                    "cell",
+                    "centroid",
+                    "coarse",
+                    sim_q(
+                        cosine_pre(
+                            F.col("centroid"),
+                            F.col("ccent"),
+                            F.col("__fn"),
+                            F.col("__ccn"),
+                        )
+                    ).alias("__cs"),
+                )
+                .groupBy("cell")
+                .agg(F.max(fbest).alias("__m"), F.first("centroid").alias("centroid"))
+                .select(
+                    "cell", "centroid", (-F.col("__m.nc")).cast("int").alias("coarse")
+                ),
+                single_partition=broadcast_fine,
+            )
+            # occupied-coarse codebook (µ-quantized mean of member fine
+            # centroids) — every coarse id here has ≥1 fine centroid,
+            # so the routed fine join can never drop a vector
+            coarse = cell_centroids(
+                fmap.select(F.col("coarse").alias("cc"), "centroid"), "cc", "centroid"
+            ).select(F.col("cell").alias("coarse"), F.col("centroid").alias("ccent"))
+            codebook = {"fmap": fmap, "occ": coarse}
+        else:
+            codebook = {"cents": cents}
+        assigned = _assign_to_codebook(v, codebook, broadcast_fine)
         if it < n_iter - 1:
-            cents = _pin_codebook(cell_centroids(assigned, "cell", "__v"))
-    return assigned, cents
+            cents = _pin_codebook(
+                cell_centroids(assigned, "cell", "__v"),
+                single_partition=single_partition,
+            )
+    return assigned, codebook
 
 
 def kmeans_assign(
@@ -599,6 +683,11 @@ def kmeans_assign(
     k: int = KMEANS_K,
     n_iter: int = KMEANS_ITERS,
     keep_vec: bool = False,
+    *,
+    two_level: bool = False,
+    coarse_k: int | None = None,
+    keep_coarse: bool = False,
+    broadcast_fine: bool | None = None,
 ) -> DataFrame:
     """Deterministic Lloyd k-means over cosine similarity: the
     iterative-clustering substrate behind corpus bucketing and
@@ -633,22 +722,60 @@ def kmeans_assign(
     broadcasts the k-row codebook and scans the corpus once — O(n·k)
     scored rows per iteration with map-side partial aggregation, the
     IVF-training cost model.  No driver-side collect: centroids stay
-    a DataFrame end to end.  k is a broadcast of k×dim doubles —
-    fine to ~10⁶ cells before the codebook itself needs sharding.
+    a DataFrame end to end.
+
+    ``two_level=True`` is the scale-safe form for corpus-sized k (the
+    :func:`recommended_kmeans_k` deployment policy makes k ∝ n, so the
+    flat n×k assignment stream is QUADRATIC in the corpus; the round-6
+    SemDeDup scale finding).  Per pass, instead of scoring every vector
+    against all k centroids:
+
+    1. route each FINE centroid to its nearest coarse centroid
+       (k × √k scored rows — codebook-sized, never corpus-sized; the
+       first ``coarse_k`` fine seeds, default √k, double as coarse
+       seeds);
+    2. rebuild the occupied-coarse codebook as the µ-quantized mean of
+       its member fine centroids (so every coarse cell a vector can
+       pick has ≥ 1 fine centroid — the routing join can never drop a
+       vector);
+    3. argmax each vector over the ~√k coarse centroids (broadcast);
+    4. join vectors to fine centroids ON THE COARSE ID and argmax
+       within the routed cell — E[k/√k] = √k candidates per vector.
+
+    Scored rows per pass: O(n·√k) instead of O(n·k) — with k = n/250
+    that is O(n^1.5/16) instead of O(n²/250).  The fine-centroid join
+    broadcasts only while the codebook is small
+    (``FINE_CODEBOOK_BROADCAST_MAX_K``); past that it is a shuffled
+    hash join on the coarse id, so the codebook shards instead of
+    replicating (``broadcast_fine`` overrides for tests).
+    Single-probe approximation: a vector only sees fine centroids
+    routed to ITS coarse cell, so the winner can differ from the flat
+    argmax near coarse-cell boundaries — the standard IVF trade, fine
+    for dedup cell formation (SemDeDup is itself approximate; Abbas et
+    al. §3 cluster with exactly this kind of quantizer).  Same
+    determinism contract as the flat form.
 
     Output: ``(id, cluster_id, sim)`` — final assignment after
     ``n_iter`` assignment passes (centroids updated between passes),
-    with the final cosine floor-quantized at 1e-4 (``sim_q``).
+    with the final cosine floor-quantized at 1e-4 (``sim_q``);
+    + ``coarse_id`` when ``keep_coarse`` (two-level only — the
+    work-accounting hook), + ``vec`` when ``keep_vec``.
     """
-    v = vectors.select(
-        F.col(id_col).alias("__vid"), _as_double(vec_col).alias("__v")
+    assigned, _codebook = _kmeans_fit(
+        _vec_frame(vectors, id_col, vec_col),
+        k,
+        n_iter,
+        two_level=two_level,
+        coarse_k=coarse_k,
+        broadcast_fine=broadcast_fine,
     )
-    assigned, _cents = _kmeans_fit(v, k, n_iter)
     out = [
         F.col("__vid").alias(id_col),
         F.col("cell").alias("cluster_id"),
         F.col("__cs").alias("sim"),
     ]
+    if keep_coarse:
+        out.append(F.col("coarse").alias("coarse_id"))
     if keep_vec:
         # downstream within-cell work (semdedup_keep) needs the vector
         # next to the assignment without a second join against the
@@ -657,13 +784,13 @@ def kmeans_assign(
     return assigned.select(*out)
 
 
-#: largest fine codebook that is still broadcast whole in
-#: :func:`kmeans_assign_two_level` — 65536 cells × 64 dims × 8 B ≈
-#: 33 MB per executor.  Above it the fine-centroid join falls back to a
-#: shuffled hash join on the coarse id, so the codebook SHARDS across
-#: the cluster instead of being replicated into every executor (the
-#: flat :func:`kmeans_assign` docstring's "fine to ~10⁶ cells" ceiling
-#: removed).
+#: largest fine codebook that is still broadcast whole by the
+#: two-level assignment (:func:`kmeans_assign` with ``two_level=True``)
+#: — 65536 cells × 64 dims × 8 B ≈ 33 MB per executor.  Above it the
+#: fine-centroid join falls back to a shuffled hash join on the coarse
+#: id, so the codebook SHARDS across the cluster instead of being
+#: replicated into every executor (the flat form's single k×dim
+#: broadcast is dead near 10⁶ cells).
 FINE_CODEBOOK_BROADCAST_MAX_K = 65536
 
 
@@ -696,252 +823,28 @@ def _unpack_argmax_simq(packed: Column) -> Column:
     return F.shiftright(packed, 33) - F.lit(20000)
 
 
-def kmeans_assign_two_level(
-    vectors: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    n_iter: int = KMEANS_ITERS,
-    coarse_k: int | None = None,
-    keep_vec: bool = False,
-    keep_coarse: bool = False,
-    broadcast_fine: bool | None = None,
-) -> DataFrame:
-    """Two-level (coarse→fine) Lloyd assignment — the scale-safe form
-    of :func:`kmeans_assign` for corpus-sized k (the
-    :func:`recommended_kmeans_k` deployment policy makes k ∝ n, so the
-    flat n×k assignment stream is QUADRATIC in the corpus; this is the
-    round-6 SemDeDup scale finding).
-
-    Per pass, instead of scoring every vector against all k centroids:
-
-    1. route each FINE centroid to its nearest coarse centroid
-       (k × √k scored rows — codebook-sized, never corpus-sized);
-    2. rebuild the occupied-coarse codebook as the µ-quantized mean of
-       its member fine centroids (so every coarse cell a vector can
-       pick has ≥ 1 fine centroid — the routing join can never drop a
-       vector);
-    3. argmax each vector over the ~√k coarse centroids (broadcast);
-    4. join vectors to fine centroids ON THE COARSE ID and argmax
-       within the routed cell — E[k/√k] = √k candidates per vector.
-
-    Scored rows per pass: O(n·√k) instead of O(n·k) — with k = n/250
-    that is O(n^1.5/16) instead of O(n²/250).  The fine-centroid join
-    broadcasts only while the codebook is small
-    (``FINE_CODEBOOK_BROADCAST_MAX_K``); past that it is a shuffled
-    hash join on the coarse id, so the codebook shards instead of
-    replicating (``broadcast_fine`` overrides for tests).
-
-    Single-probe approximation: a vector only sees fine centroids
-    routed to ITS coarse cell, so the winner can differ from the flat
-    argmax near coarse-cell boundaries — the standard IVF trade, fine
-    for dedup cell formation (SemDeDup is itself approximate; Abbas et
-    al. §3 cluster with exactly this kind of quantizer).  Same
-    determinism contract as the flat form: portable-hash seeding (the
-    first ``coarse_k`` fine seeds double as coarse seeds), quantized
-    argmax with ties to the lowest id, µ-quantized centroid means.
-
-    Output: ``(id, cluster_id, sim)`` (+ ``coarse_id`` when
-    ``keep_coarse`` — the work-accounting hook, + ``vec`` when
-    ``keep_vec``)."""
-    v = vectors.select(
-        F.col(id_col).alias("__vid"), _as_double(vec_col).alias("__v")
-    )
-    assigned, _fmap, _occ = _kmeans_fit_two_level(
-        v, k, n_iter, coarse_k=coarse_k, broadcast_fine=broadcast_fine
-    )
-    out = [
-        F.col("__vid").alias(id_col),
-        F.col("cell").alias("cluster_id"),
-        F.col("__cs").alias("sim"),
-    ]
-    if keep_coarse:
-        out.append(F.col("coarse").alias("coarse_id"))
-    if keep_vec:
-        out.append(F.col("__v").alias("vec"))
-    return assigned.select(*out)
-
-
-def _kmeans_fit_two_level(
-    v: DataFrame,
-    k: int,
-    n_iter: int = KMEANS_ITERS,
-    coarse_k: int | None = None,
-    broadcast_fine: bool | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The two-level Lloyd loop over ``v`` (``__vid``, ``__v``) —
-    :func:`kmeans_assign_two_level`'s engine, split out so incremental
-    consumers can probe the SAME geometry the stored assignment used:
-    returns ``(assigned, fmap, occ)`` where ``assigned`` is the final
-    per-vector assignment (``__vid``, ``__v``, ``coarse``, ``cell``,
-    ``__cs``), ``fmap`` the fine codebook WITH its coarse routing
-    (``cell``, ``centroid``, ``coarse``) and ``occ`` the occupied-
-    coarse codebook (``coarse``, ``ccent``) — both exactly as the
-    FINAL assignment pass consumed them (the flat
-    :func:`_kmeans_fit` contract, lifted to two levels)."""
-    if coarse_k is None:
-        coarse_k = max(2, math.isqrt(k))
-    if broadcast_fine is None:
-        broadcast_fine = k <= FINE_CODEBOOK_BROADCAST_MAX_K
-    h = F.conv(
-        F.substring(F.md5(F.col("__vid").cast("string")), 1, 8), 16, 10
-    ).cast("long")
-    seeds = v.select("__vid", "__v", h.alias("__h")).orderBy("__h", "__vid").limit(k)
-    w = Window.orderBy("__h", "__vid")  # k rows post-limit: bounded window
-    # the per-iteration FINE codebook and its routed fmap are pinned
-    # (_pin_codebook): fmap is referenced twice per pass (occ + the
-    # fine join) and fine derives from the WHOLE previous pass, so the
-    # unpinned plan grows exponentially in n_iter — measured at sf0.1:
-    # a 4.8 MB static plan with 1600 scans of the vector table, and
-    # Catalyst analysis dominating the auto twins' wall clock (x45_auto
-    # 52.6 s → ~7 s pinned).  occ stays LAZY: it is one tiny aggregate
-    # over the pinned fmap leaf, and a pin here is a whole extra Spark
-    # job (~0.4 s of fixed local overhead) per iteration for nothing —
-    # probed both ways.  Pinning ONLY fine (fmap lazy too) was also
-    # probed and is ~1-2.5 s slower per auto query: fmap's duplicated
-    # references then re-execute at every use.  The fine codebook
-    # keeps its sharded layout past the broadcast ceiling
-    # (single_partition only when it would broadcast anyway).
-    fine = _pin_codebook(
-        seeds.select(
-            F.row_number().over(w).alias("cell"), F.col("__v").alias("centroid")
-        ),
-        single_partition=broadcast_fine,
-    )
-    coarse = fine.filter(F.col("cell") <= coarse_k).select(
-        F.col("cell").alias("coarse"), F.col("centroid").alias("ccent")
-    )
-    # vector norms once per row for the WHOLE fit (v is loop-invariant)
-    # instead of once per scored row in both argmax streams (cosine_pre)
-    vn = v.withColumn("__vn", l2_norm(F.col("__v")))
-    assigned = None
-    for it in range(n_iter):
-        # 1. fine → coarse routing (codebook × coarse codebook product)
-        fbest = F.struct(F.col("__cs").alias("s"), (-F.col("coarse")).alias("nc"))
-        fmap = _pin_codebook(
-            fine.withColumn("__fn", l2_norm(F.col("centroid")))
-            .crossJoin(
-                F.broadcast(coarse.withColumn("__ccn", l2_norm(F.col("ccent"))))
-            )
-            .select(
-                "cell",
-                "centroid",
-                "coarse",
-                sim_q(
-                    cosine_pre(
-                        F.col("centroid"),
-                        F.col("ccent"),
-                        F.col("__fn"),
-                        F.col("__ccn"),
-                    )
-                ).alias("__cs"),
-            )
-            .groupBy("cell")
-            .agg(F.max(fbest).alias("__m"), F.first("centroid").alias("centroid"))
-            .select(
-                "cell", "centroid", (-F.col("__m.nc")).cast("int").alias("coarse")
-            ),
-            single_partition=broadcast_fine,
-        )
-        # 2. occupied-coarse codebook (µ-quantized mean of member fine
-        #    centroids) — every coarse id here has ≥1 fine centroid
-        occ = cell_centroids(
-            fmap.select(F.col("coarse").alias("cc"), "centroid"), "cc", "centroid"
-        ).select(F.col("cell").alias("coarse"), F.col("centroid").alias("ccent"))
-        # 3. vector → coarse argmax (n × |occ| rows, tiny broadcast).
-        #    The scored product carries the vector ONLY transiently
-        #    inside the pipelined project→hash-agg stage: the agg state
-        #    is one packed long per vector (map-side combine), never a
-        #    sort of array rows — see _pack_argmax.
-        s3 = (
-            vn.crossJoin(
-                F.broadcast(occ.withColumn("__on", l2_norm(F.col("ccent"))))
-            )
-            .select(
-                "__vid",
-                _pack_argmax(
-                    sim_q(
-                        cosine_pre(
-                            F.col("__v"),
-                            F.col("ccent"),
-                            F.col("__vn"),
-                            F.col("__on"),
-                        )
-                    ),
-                    F.col("coarse"),
-                ).alias("__p"),
-            )
-            .groupBy("__vid")
-            .agg(F.max("__p").alias("__p"))
-            .select(
-                "__vid", _unpack_argmax_id(F.col("__p")).cast("int").alias("coarse")
-            )
-        )
-        # reattach the vector by id (n narrow rows — the payload moves
-        # ONCE per pass, not once per scored candidate)
-        vc = vn.join(s3, "__vid")
-        # 4. fine argmax WITHIN the routed coarse cell — equi-join on
-        #    the coarse id; sharded (shuffle_hash) once the codebook
-        #    outgrows a sane broadcast
-        fj = fmap.select(
-            "coarse", "cell", "centroid", l2_norm(F.col("centroid")).alias("__fn")
-        )
-        fj = F.broadcast(fj) if broadcast_fine else fj.hint("shuffle_hash")
-        s4 = (
-            vc.join(fj, "coarse")
-            .select(
-                "__vid",
-                _pack_argmax(
-                    sim_q(
-                        cosine_pre(
-                            F.col("__v"),
-                            F.col("centroid"),
-                            F.col("__vn"),
-                            F.col("__fn"),
-                        )
-                    ),
-                    F.col("cell"),
-                ).alias("__p"),
-            )
-            .groupBy("__vid")
-            .agg(F.max("__p").alias("__p"))
-            .select(
-                "__vid",
-                _unpack_argmax_id(F.col("__p")).cast("int").alias("cell"),
-                _unpack_argmax_simq(F.col("__p")).alias("__cs"),
-            )
-        )
-        assigned = s4.join(vc, "__vid").select(
-            "__vid", "__v", "coarse", "cell", "__cs"
-        )
-        if it < n_iter - 1:
-            fine = _pin_codebook(
-                cell_centroids(assigned, "cell", "__v"),
-                single_partition=broadcast_fine,
-            )
-            coarse = occ
-    return assigned, fmap, occ
-
-
 def _batch_assign_two_level(
     v: DataFrame,
     fmap: DataFrame,
     occ: DataFrame,
     broadcast_fine: bool = True,
-    keep_coarse: bool = False,
 ) -> DataFrame:
     """One two-level assignment pass of ``v`` (``__vid``, ``__v``)
-    against an EXISTING codebook pair (``fmap``/``occ`` as
-    :func:`_kmeans_fit_two_level` returns them) — steps 3-4 of the
-    fit loop with no refit, the scale-safe sibling of
-    :func:`_batch_assign` (which scores n×k against the flat codebook:
-    quadratic when k ∝ n).  Coarse argmax over the broadcast occupied
-    codebook, vector reattached by id (payload moves once), fine
-    argmax WITHIN the routed coarse cell via the broadcast-or-sharded
-    fine join.  Output: ``(__vid, __v, cell, __cs)``
-    (+ ``coarse`` when ``keep_coarse`` — the work-accounting hook)."""
+    against a codebook pair (``fmap``/``occ`` as :func:`_kmeans_fit`
+    returns them) — steps 3-4 of the two-level Lloyd pass, the
+    scale-safe sibling of :func:`_batch_assign` (which scores n×k
+    against the flat codebook: quadratic when k ∝ n).  Coarse argmax
+    over the broadcast occupied codebook, vector reattached by id
+    (payload moves once), fine argmax WITHIN the routed coarse cell via
+    the broadcast-or-sharded fine join.  Output: ``(__vid, __v, coarse,
+    cell, __cs)``."""
     # batch norms once per row, not per scored row (cosine_pre)
     vn = v.withColumn("__vn", l2_norm(F.col("__v")))
+    # vector → coarse argmax (n × |occ| rows, tiny broadcast).  The
+    # scored product carries the vector ONLY transiently inside the
+    # pipelined project→hash-agg stage: the agg state is one packed
+    # long per vector (map-side combine), never a sort of array rows —
+    # see _pack_argmax.
     s3 = (
         vn.crossJoin(F.broadcast(occ.withColumn("__on", l2_norm(F.col("ccent")))))
         .select(
@@ -961,7 +864,12 @@ def _batch_assign_two_level(
             "__vid", _unpack_argmax_id(F.col("__p")).cast("int").alias("coarse")
         )
     )
+    # reattach the vector by id (n narrow rows — the payload moves
+    # ONCE per pass, not once per scored candidate)
     vc = vn.join(s3, "__vid")
+    # fine argmax WITHIN the routed coarse cell — equi-join on the
+    # coarse id; sharded (shuffle_hash) once the codebook outgrows a
+    # sane broadcast
     fj = fmap.select(
         "coarse", "cell", "centroid", l2_norm(F.col("centroid")).alias("__fn")
     )
@@ -990,10 +898,29 @@ def _batch_assign_two_level(
             _unpack_argmax_simq(F.col("__p")).alias("__cs"),
         )
     )
-    cols = ["__vid", "__v", "cell", "__cs"]
-    if keep_coarse:
-        cols.append("coarse")
-    return s4.join(vc, "__vid").select(*cols)
+    return s4.join(vc, "__vid").select("__vid", "__v", "coarse", "cell", "__cs")
+
+
+def _assign_to_codebook(
+    v: DataFrame,
+    codebook: dict[str, DataFrame],
+    broadcast_fine: bool | None = None,
+) -> DataFrame:
+    """The one assignment step: ``v`` (``__vid``, ``__v``) against a
+    codebook of either shape (:func:`_kmeans_fit`), with no refit — the
+    flat broadcast argmax (:func:`_batch_assign`) against ``cents``, or
+    the two-level probe (:func:`_batch_assign_two_level`) against
+    ``fmap``/``occ``.  Every Lloyd pass and every batch probe (in-query
+    or against a stored index) runs through here.  ``broadcast_fine``
+    is the fit's broadcast-or-shard decision; ``None`` re-derives it
+    from the fine codebook's own size (k rows — an index-metadata
+    count)."""
+    if "cents" in codebook:
+        return _batch_assign(v, codebook["cents"])
+    fmap = codebook["fmap"]
+    if broadcast_fine is None:
+        broadcast_fine = fmap.count() <= FINE_CODEBOOK_BROADCAST_MAX_K
+    return _batch_assign_two_level(v, fmap, codebook["occ"], broadcast_fine)
 
 
 def _cell_near_pairs(
@@ -1043,8 +970,6 @@ def semdedup_keep(
     n_iter: int = KMEANS_ITERS,
     threshold: float = 0.8,
     two_level: bool = False,
-    coarse_k: int | None = None,
-    broadcast_fine: bool | None = None,
 ) -> DataFrame:
     """SemDeDup keep/drop decision (Abbas et al., "SemDeDup: Data-
     efficient learning at web-scale through semantic deduplication",
@@ -1067,32 +992,22 @@ def semdedup_keep(
     pair-join sides scan one kmeans subtree that AQE deduplicates via
     exchange reuse.  With k ∝ n the FLAT assignment stream is itself
     quadratic (n·k scored rows per pass) — the deployment form passes
-    ``two_level=True`` to route through
-    :func:`kmeans_assign_two_level` (O(n·√k) per pass, shardable
-    codebook); the registered fixed-k x45 keeps the flat form its
+    ``two_level=True`` to :func:`kmeans_assign` (O(n·√k) per pass,
+    shardable codebook); the registered fixed-k x45 keeps the flat form its
     unrolled DuckDB oracle replays.
 
     Output: ``(id, cluster_id, n_near, kept)`` — epsilon-neighborhood
     degree and the 0/1 keep flag.
     """
-    if two_level:
-        assigned = kmeans_assign_two_level(
-            vectors,
-            id_col,
-            vec_col,
-            k,
-            n_iter,
-            coarse_k=coarse_k,
-            keep_vec=True,
-            broadcast_fine=broadcast_fine,
-        )
-    else:
+    if not two_level:
         # loud guard: the flat fixed-k form is the oracle anchor; past
         # ~10x the sf0.1 corpus its cell widths make the pair stream
         # quadratic (the count is a metadata-cheap pruned-scan job and
         # runs once, at plan-construction time)
         _warn_fixed_k_scale(vectors.select(id_col).count(), k)
-        assigned = kmeans_assign(vectors, id_col, vec_col, k, n_iter, keep_vec=True)
+    assigned = kmeans_assign(
+        vectors, id_col, vec_col, k, n_iter, keep_vec=True, two_level=two_level
+    )
     pairs = _cell_near_pairs(assigned, id_col, "cluster_id", "vec", threshold)
     sym = pairs.select(
         F.col("id_a").alias("__nid"), F.col("id_b").alias("nb")
@@ -1137,10 +1052,9 @@ def semdedup_corpus_index(
       probed batch sees exactly the geometry the stored assignment
       saw.  Its keys are the stored artifact names
       (``index_store.SEM_INDEX_LAYOUT``): ``{"cents"}`` for the flat
-      fit (``cell, centroid`` — :func:`_kmeans_fit`), ``{"fmap",
-      "occ"}`` for the two-level fit (the fine codebook with its
-      coarse routing, and the occupied-coarse codebook —
-      :func:`_kmeans_fit_two_level`).
+      fit, ``{"fmap", "occ"}`` for the two-level fit (the fine codebook
+      with its coarse routing, and the occupied-coarse codebook) —
+      exactly the dict :func:`_kmeans_fit` returns.
 
     The flat fixed-k fit is the oracle anchor the unrolled DuckDB
     replay matches.  The deployment form passes ``k=None``
@@ -1155,18 +1069,13 @@ def semdedup_corpus_index(
     (the x53 framing)."""
     if k is None:
         k = recommended_kmeans_k(corpus.count())
-    cv = corpus.select(
-        F.col(id_col).alias("__vid"), _as_double(vec_col).alias("__v")
-    )
-    if two_level:
-        assigned, fmap, occ = _kmeans_fit_two_level(cv, k, n_iter)
-        codebook = {"fmap": fmap, "occ": occ}
-    else:
+    if not two_level:
         # same loud guard as semdedup_keep: the flat fixed-k index is
         # the oracle anchor, not the deployment shape
         _warn_fixed_k_scale(corpus.select(id_col).count(), k)
-        assigned, cents = _kmeans_fit(cv, k, n_iter)
-        codebook = {"cents": cents}
+    assigned, codebook = _kmeans_fit(
+        _vec_frame(corpus, id_col, vec_col), k, n_iter, two_level=two_level
+    )
     # a corpus vector is dropped iff a SMALLER-id same-cell neighbor is
     # near it (the x45 greedy rule) — only the drop side is needed here
     pairs = _cell_near_pairs(assigned, "__vid", "cell", "__v", threshold)
@@ -1177,35 +1086,6 @@ def semdedup_corpus_index(
         "cell", F.col("__vid").alias("corpus_id"), F.col("__v").alias("__cv")
     )
     return survivors, codebook
-
-
-def _assign_to_codebook(
-    batch: DataFrame,
-    id_col: str,
-    vec_col: str,
-    codebook: dict[str, DataFrame],
-    broadcast_fine: bool | None = None,
-) -> DataFrame:
-    """Assign ``batch`` to an EXISTING codebook of either shape
-    (:func:`semdedup_corpus_index`) with no refit: the flat broadcast
-    argmax (:func:`_batch_assign`) against ``cents``, or the two-level
-    probe (:func:`_batch_assign_two_level` — coarse argmax against the
-    ~√k-row broadcast occupied codebook, fine argmax only within the
-    routed coarse cell) against ``fmap``/``occ``.  ``broadcast_fine``
-    is the fit's broadcast-or-shard decision; ``None`` re-derives it
-    from the fine codebook's own size (k rows — an index-metadata
-    count).  Output: ``(__vid, __v, cell, __cs)``."""
-    bv = batch.select(
-        F.col(id_col).alias("__vid"), _as_double(vec_col).alias("__v")
-    )
-    if "cents" in codebook:
-        return _batch_assign(bv, codebook["cents"])
-    fmap = codebook["fmap"]
-    if broadcast_fine is None:
-        broadcast_fine = fmap.count() <= FINE_CODEBOOK_BROADCAST_MAX_K
-    return _batch_assign_two_level(
-        bv, fmap, codebook["occ"], broadcast_fine=broadcast_fine
-    )
 
 
 def semdedup_incremental_candidates(
@@ -1225,7 +1105,7 @@ def semdedup_incremental_candidates(
     survivors, codebook = semdedup_corpus_index(
         corpus, id_col, vec_col, k, n_iter, threshold
     )
-    bassigned = _assign_to_codebook(batch, id_col, vec_col, codebook)
+    bassigned = _assign_to_codebook(_vec_frame(batch, id_col, vec_col), codebook)
     return bassigned.join(survivors, "cell").select(
         F.col("__vid").alias("batch_id"), "corpus_id"
     )
@@ -1277,7 +1157,8 @@ def semdedup_incremental(
         corpus, id_col, vec_col, k, n_iter, threshold, two_level=two_level
     )
     bassigned = _assign_to_codebook(
-        batch, id_col, vec_col, codebook,
+        _vec_frame(batch, id_col, vec_col),
+        codebook,
         broadcast_fine=k <= FINE_CODEBOOK_BROADCAST_MAX_K,
     )
     return _probe_keep(bassigned, survivors, id_col, threshold)
@@ -1393,7 +1274,7 @@ def semdedup_incremental_stored(
     by construction."""
     codebook = index_store.read_index(spark, index_dir, index_store.SEM_INDEX_LAYOUT)
     survivors = codebook.pop("survivors")
-    bassigned = _assign_to_codebook(batch, id_col, vec_col, codebook)
+    bassigned = _assign_to_codebook(_vec_frame(batch, id_col, vec_col), codebook)
     return _probe_keep(bassigned, survivors, id_col, threshold)
 
 

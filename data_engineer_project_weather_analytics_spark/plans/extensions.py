@@ -1422,7 +1422,7 @@ def x45_semdedup_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deployment form of x45: cell count sized to the corpus
     (``recommended_kmeans_k``, holding expected cell width constant so
     the within-cell pair stream stays linear) AND the two-level
-    coarse→fine assignment (``kmeans_assign_two_level``, O(n·√k)
+    coarse→fine assignment (``kmeans_assign(two_level=True)``, O(n·√k)
     scored rows per Lloyd pass where the flat form's n·k is quadratic
     when k ∝ n — the round-6 scale finding).  Rows-only by necessity —
     k depends on a runtime ``count()`` — but registered so the

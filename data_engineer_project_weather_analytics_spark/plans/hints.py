@@ -28,7 +28,10 @@ scale-constant sides; everything SF-scaling goes through
 from __future__ import annotations
 
 import re
+import warnings
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -76,13 +79,22 @@ def maybe_broadcast(df: DataFrame, threshold_bytes: int | None = None) -> DataFr
     """Broadcast hint ONLY if the plan-stats size estimate fits under
     the threshold (default: the session's autoBroadcastJoinThreshold);
     otherwise return ``df`` unhinted and let stats/AQE choose the join
-    strategy at the actual data size."""
+    strategy at the actual data size.  A failed JVM stats call (raw
+    ``Py4JJavaError``, or the ``CapturedException`` pyspark converts
+    known JVM exception classes into) is surfaced as a
+    ``RuntimeWarning`` and ``df`` is returned unhinted."""
     if threshold_bytes is None:
         threshold_bytes = broadcast_threshold_bytes(df.sparkSession)
     if threshold_bytes < 0:
         return df
     try:
         size = estimated_size_bytes(df)
-    except Exception:
-        return df  # no estimate → no forced hint (the safe direction)
+    except (Py4JJavaError, CapturedException) as exc:
+        # no estimate → no forced hint (the safe direction), but say so
+        warnings.warn(
+            f"no plan-stats size estimate, broadcast hint dropped: {exc}",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+        return df
     return F.broadcast(df) if size <= threshold_bytes else df

@@ -22,7 +22,9 @@ from __future__ import annotations
 import os
 import warnings
 
+from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException, IllegalArgumentException
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import SparkSession
 
 #: Conf entries safe to set on a live session (no restart needed).
@@ -49,7 +51,9 @@ def _ship_package(spark: SparkSession) -> None:
     defining module — which fails when the driver process runs from a
     cwd that doesn't contain the package (the embedding harness does
     exactly that).  ``addPyFile`` distributes a zip of the package and
-    prepends it to every worker's sys.path, independent of cwd."""
+    prepends it to every worker's sys.path, independent of cwd.  A
+    failed zip or ``addPyFile`` warns and leaves the session unmarked,
+    so the next :func:`configure` retries."""
     sc = spark.sparkContext
     if getattr(sc, "_data_engineer_project_weather_analytics_spark_shipped", False):
         return
@@ -69,9 +73,15 @@ def _ship_package(spark: SparkSession) -> None:
                         rel = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
                         zf.write(full, rel)
         sc.addPyFile(zip_path)
-        sc._data_engineer_project_weather_analytics_spark_shipped = True
-    except Exception:
-        pass  # closures defined by-value still work; only module refs need this
+    except (OSError, Py4JJavaError, CapturedException) as exc:
+        # closures defined by-value still work; only module refs need this
+        warnings.warn(
+            f"could not ship the package to Spark workers: {exc}",
+            RuntimeWarning,
+            stacklevel=3,
+        )
+        return
+    sc._data_engineer_project_weather_analytics_spark_shipped = True
 
 
 def configure(spark: SparkSession) -> SparkSession:

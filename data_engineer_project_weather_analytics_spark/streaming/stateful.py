@@ -16,7 +16,7 @@ this module importable.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
@@ -336,35 +336,66 @@ def _py_l2_norm(xs: list[float]) -> float:
     return math.sqrt(s)
 
 
+def _literal_argmax(
+    cos: Callable[[list[float]], F.Column],
+    members: list[tuple[int, list[float]]],
+) -> F.Column:
+    """Argmax of ``cos(centroid)`` over literal ``(id, centroid)``
+    members: one packed-BIGINT key per member (quantized cosine, ties to
+    the lowest id — the batch hash-agg's ``_pack_argmax`` encoding),
+    ``greatest()`` across them, the id unpacked."""
+    from data_engineer_project_weather_analytics_spark.operators.similarity import (
+        _pack_argmax,
+        _unpack_argmax_id,
+        sim_q,
+    )
+
+    packed = [_pack_argmax(sim_q(cos(cent)), F.lit(int(i))) for i, cent in members]
+    best = packed[0] if len(packed) == 1 else F.greatest(*packed)
+    return _unpack_argmax_id(best).cast("int")
+
+
 def with_cell_assignment(
     df: DataFrame,
     vec_col: str,
-    centroids: list[tuple[int, list[float]]],
-    cell_col: str = "cell",
+    codebook: dict[str, DataFrame],
 ) -> DataFrame:
     """Per-ROW nearest-centroid assignment against a LITERAL codebook —
     `(.., cell)` with NO aggregation, so the projection composes with a
-    streaming source (the batch ``_batch_assign``'s crossJoin + groupBy
-    argmax is a shuffle the stateful stage below must not be preceded
-    by; this is the :func:`with_minhash_bands` recipe applied to the
-    kmeans codebook).  ``centroids`` is the collected index —
-    `F.lit(double)` round-trips each component exactly, and the argmax
-    is `greatest()` over the same packed-BIGINT keys the batch hash-agg
-    uses (quantized cosine, ties to the lowest cell), so the assignment
-    is BIT-IDENTICAL to the batch form — asserted by
-    tests/test_streaming.py::test_with_cell_assignment_matches_batch.
+    streaming source (the batch ``similarity._assign_to_codebook``'s
+    crossJoin/join + groupBy argmax is a shuffle the stateful stage
+    below must not be preceded by; this is the
+    :func:`with_minhash_bands` recipe applied to the kmeans codebook).
+
+    ``codebook`` is the batch codebook dict of either shape
+    (``similarity._kmeans_fit`` or a stored index read back with
+    ``index_store.read_index``), collected here and folded into the
+    plan as literals — ``F.lit(double)`` round-trips each component
+    exactly, and every argmax is ``greatest()`` over the same
+    packed-BIGINT keys the batch hash-agg uses, so the assignment is
+    BIT-IDENTICAL to the batch form (asserted by
+    tests/test_streaming.py::test_with_cell_assignment_matches_batch and
+    ::test_streaming_semdedup_stored_probe_equals_batch_x54c):
+
+    - ``{"cents"}`` (flat): one argmax over all k centroids;
+    - ``{"fmap", "occ"}`` (two-level): coarse argmax over the ~√k-row
+      occupied codebook, then fine argmax ONLY among the routed coarse
+      cell's members via a lazily-evaluated CASE branch per coarse cell
+      — each row computes ~2·√k cosines instead of k, which is what
+      lets a stream probe the stored auto-k index (x54c's artifacts)
+      without the flat k-wide argmax that dominated the 100× streaming
+      point (round-11 finding).
 
     Codebook size bound: k × dim doubles fold into the plan as
     literals; fine for the broadcastable regime
     (``FINE_CODEBOOK_BROADCAST_MAX_K``) — past that the probe becomes a
     stream-static join against a codebook table, same semantics."""
+    from collections import defaultdict
+
     from data_engineer_project_weather_analytics_spark.operators.similarity import (
         _as_double,
-        _pack_argmax,
-        _unpack_argmax_id,
         cosine_pre,
         l2_norm,
-        sim_q,
     )
 
     # the row's own norm folds ONCE per row (not once per centroid),
@@ -375,111 +406,41 @@ def with_cell_assignment(
     # bit-parity pytest pins) are unchanged.  Per-row fold work drops
     # from 3 per centroid to 1 per centroid + 1 per row (cosine_pre).
     v = _as_double(vec_col)
-    tmp = df.withColumn("__vn", l2_norm(v))
-    packed = [
-        _pack_argmax(
-            sim_q(
-                cosine_pre(
-                    v,
-                    F.array(*[F.lit(float(x)) for x in cent]),
-                    F.col("__vn"),
-                    F.lit(_py_l2_norm(cent)),
-                )
-            ),
-            F.lit(int(cell)),
-        )
-        for cell, cent in centroids
-    ]
-    best = packed[0] if len(packed) == 1 else F.greatest(*packed)
-    return tmp.withColumn(cell_col, _unpack_argmax_id(best).cast("int")).drop(
-        "__vn"
-    )
 
-
-def with_two_level_cell_assignment(
-    df: DataFrame,
-    vec_col: str,
-    fmap_rows: list[tuple[int, list[float], int]],
-    occ_rows: list[tuple[int, list[float]]],
-    cell_col: str = "cell",
-) -> DataFrame:
-    """Per-ROW TWO-LEVEL nearest-centroid assignment against literal
-    codebooks — :func:`with_cell_assignment` lifted to the deployment
-    geometry (``similarity._batch_assign_two_level``'s coarse→fine
-    route as pure narrow projections): coarse argmax over the ~√k-row
-    occupied codebook (``occ_rows``: ``(coarse, ccent)``), then fine
-    argmax ONLY among the routed coarse cell's members (``fmap_rows``:
-    ``(cell, centroid, coarse)``) via a lazily-evaluated CASE branch
-    per coarse cell — each row computes ~2·√k cosines instead of the
-    flat form's k.  Same packed-BIGINT ``greatest()`` keys as the
-    batch hash-agg argmax (quantized cosine, ties to the lowest id),
-    so the assignment is BIT-IDENTICAL to
-    ``_batch_assign_two_level`` — asserted by
-    tests/test_streaming.py::test_streaming_semdedup_stored_probe_equals_batch_x54c.
-    This is what lets a stream probe the STORED auto-k index (x54c's
-    artifacts) without paying the flat k-wide literal argmax that
-    dominated the 100× streaming point (round-11 finding)."""
-    from collections import defaultdict
-
-    from data_engineer_project_weather_analytics_spark.operators.similarity import (
-        _as_double,
-        _pack_argmax,
-        _unpack_argmax_id,
-        cosine_pre,
-        l2_norm,
-        sim_q,
-    )
-
-    v = _as_double(vec_col)
-
-    def lit_vec(xs: list[float]) -> F.Column:
-        return F.array(*[F.lit(float(x)) for x in xs])
-
-    # one row-norm fold per row + literal centroid norms (see
-    # with_cell_assignment / _py_l2_norm — bit-identical keys)
     def cos(cent: list[float]) -> F.Column:
         return cosine_pre(
-            v, lit_vec(cent), F.col("__vn"), F.lit(_py_l2_norm(cent))
+            v,
+            F.array(*[F.lit(float(x)) for x in cent]),
+            F.col("__vn"),
+            F.lit(_py_l2_norm(cent)),
         )
 
-    cpacked = [
-        _pack_argmax(sim_q(cos(cc)), F.lit(int(c))) for c, cc in occ_rows
-    ]
-    cbest = cpacked[0] if len(cpacked) == 1 else F.greatest(*cpacked)
-    routed = df.withColumn("__vn", l2_norm(v)).withColumn(
-        "__coarse", _unpack_argmax_id(cbest).cast("int")
-    )
+    out = df.withColumn("__vn", l2_norm(v))
+    if "cents" in codebook:
+        cents = [(r["cell"], r["centroid"]) for r in codebook["cents"].collect()]
+        return out.withColumn("cell", _literal_argmax(cos, cents)).drop("__vn")
+    occ = [(r["coarse"], r["ccent"]) for r in codebook["occ"].collect()]
     members: dict[int, list[tuple[int, list[float]]]] = defaultdict(list)
-    for cell, cent, coarse in fmap_rows:
-        members[int(coarse)].append((int(cell), cent))
-    fine_expr = None
+    for r in codebook["fmap"].collect():
+        members[int(r["coarse"])].append((r["cell"], r["centroid"]))
+    out = out.withColumn("__coarse", _literal_argmax(cos, occ))
+    fine = None
     for coarse in sorted(members):
-        packed = [
-            _pack_argmax(sim_q(cos(cent)), F.lit(cell))
-            for cell, cent in members[coarse]
-        ]
-        best = packed[0] if len(packed) == 1 else F.greatest(*packed)
-        cellv = _unpack_argmax_id(best).cast("int")
         cond = F.col("__coarse") == coarse
-        fine_expr = (
-            F.when(cond, cellv)
-            if fine_expr is None
-            else fine_expr.when(cond, cellv)
-        )
-    return routed.withColumn(cell_col, fine_expr).drop("__coarse", "__vn")
+        cell = _literal_argmax(cos, members[coarse])
+        fine = F.when(cond, cell) if fine is None else fine.when(cond, cell)
+    return out.withColumn("cell", fine).drop("__coarse", "__vn")
 
 
 def streaming_semdedup_probe(
     stream: DataFrame,
     id_col: str,
     vec_col: str,
-    centroids: list[tuple[int, list[float]]] | None = None,
+    codebook: dict[str, DataFrame],
     threshold: float = 0.8,
     max_cell: int = 10_000,
     state_ttl_ms: int | None = None,
     seed_col: str | None = None,
-    fmap_rows: list[tuple[int, list[float], int]] | None = None,
-    occ_rows: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
     """Streaming incremental semantic dedup — the micro-batch twin of
     the batch x54 probe (operators/similarity.py:semdedup_incremental):
@@ -508,27 +469,14 @@ def streaming_semdedup_probe(
     Output per probe vector: the x54 row
     ``(vec_id, cluster_id, n_corpus_near, best_sim, kept)``.
 
-    Codebook: pass EITHER ``centroids`` (flat literal codebook — the
-    oracle-k regime) or ``fmap_rows``/``occ_rows`` (the two-level
-    codebooks of the stored auto-k index,
-    :func:`with_two_level_cell_assignment` — the deployment regime:
-    ~2·√k cosines per row instead of k, which is what makes the
-    stream probe viable once k tracks the corpus)."""
+    ``codebook`` is the batch codebook dict of either shape
+    (:func:`with_cell_assignment`): ``{"cents"}`` for the flat
+    oracle-k regime, ``{"fmap", "occ"}`` for the stored auto-k index —
+    the deployment regime, ~2·√k cosines per row instead of k, which
+    is what makes the stream probe viable once k tracks the corpus."""
     import math
 
-    if (fmap_rows is None) == (centroids is None):
-        raise ValueError(
-            "pass exactly one of `centroids` (flat) or "
-            "`fmap_rows`+`occ_rows` (two-level stored codebooks)"
-        )
-    if fmap_rows is not None:
-        if occ_rows is None:
-            raise ValueError("fmap_rows requires occ_rows")
-        assigned = with_two_level_cell_assignment(
-            stream, vec_col, fmap_rows, occ_rows
-        )
-    else:
-        assigned = with_cell_assignment(stream, vec_col, centroids)
+    assigned = with_cell_assignment(stream, vec_col, codebook)
     from data_engineer_project_weather_analytics_spark.operators.similarity import _as_double
 
     sel = [

@@ -168,7 +168,7 @@ def test_bench_scale_accounted_targets_are_timed():
 #: an already-journaled work_rows kind, replica construction,
 #: ACCOUNTING_SLACK)?  If yes → bump JOURNAL_EPOCH too (full
 #: re-measure); if purely additive → keep the epoch and the bank.
-_BENCH_SCALE_MD5 = "e1f9b750d7aa17c98e474dfe6f04c035"  # stored-index pre-warm skips journaled entries (untimed path only, epoch kept); r13: t0 above fn() (semantics change, epoch bumped) + stored-index pre-warm (keeps the build untimed; identical to best-of-2's min for sub-cutoff samples, so same-epoch entries stay valid)
+_BENCH_SCALE_MD5 = "6b1649c6e70dad05d39c0106d317d707"  # accounting call sites renamed to the one k-means fit/assign (same fit, same counted rows; epoch kept); stored-index pre-warm skips journaled entries (untimed path only, epoch kept); r13: t0 above fn() (semantics change, epoch bumped) + stored-index pre-warm (keeps the build untimed; identical to best-of-2's min for sub-cutoff samples, so same-epoch entries stay valid)
 
 
 def test_journal_epoch_discipline():

@@ -1284,13 +1284,15 @@ def test_x54_registered_query_batch_identity(spark):
             assert r["n_corpus_near"] >= 1 and r["best_sim"] >= 8000, r
 
 
-def test_batch_assign_two_level_is_consistent_with_fit(spark):
-    """The 'probe sees the same geometry' contract: re-probing the
-    CORPUS vectors through _batch_assign_two_level against the fit's
-    returned (fmap, occ) must reproduce the fit's own final
-    assignment exactly — the two-level analogue of the flat form's
-    'cents is what the stored assignment used' rule
-    (semdedup_corpus_index docstring)."""
+@pytest.mark.parametrize("two_level", [False, True], ids=["flat", "two_level"])
+def test_batch_assign_two_level_is_consistent_with_fit(spark, two_level):
+    """The 'probe sees the same geometry' contract, for both codebook
+    shapes: re-probing the CORPUS vectors through the assignment step
+    (_assign_to_codebook) against the fit's returned codebook must
+    reproduce the fit's own final assignment exactly — the flat
+    ``{"cents"}`` and the two-level ``{"fmap", "occ"}`` codebook alike
+    are what the stored assignment used (semdedup_corpus_index
+    docstring)."""
     import random
 
     from pyspark.sql import functions as F
@@ -1304,9 +1306,11 @@ def test_batch_assign_two_level_is_consistent_with_fit(spark):
         F.col("vec_id").alias("__vid"),
         F.col("embedding").alias("__v"),
     )
-    assigned, fmap, occ = similarity._kmeans_fit_two_level(v, k=16, n_iter=2)
+    assigned, codebook = similarity._kmeans_fit(
+        v, k=16, n_iter=2, two_level=two_level
+    )
     fit = {r["__vid"]: r["cell"] for r in assigned.collect()}
-    probe = similarity._batch_assign_two_level(v, fmap, occ)
+    probe = similarity._assign_to_codebook(v, codebook)
     got = {r["__vid"]: r["cell"] for r in probe.collect()}
     assert got == fit
 

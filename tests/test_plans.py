@@ -493,6 +493,34 @@ def test_maybe_broadcast_is_size_conditional(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
+def test_maybe_broadcast_warns_on_jvm_stats_error(spark, monkeypatch):
+    """A failed JVM stats call must surface as a RuntimeWarning and
+    leave the side unhinted — both shapes a Py4J call fails with: a JVM
+    exception pyspark converts (NumberFormatException) and one it
+    passes through raw (Py4JJavaError).  A healthy dashboard
+    dimension join (a5) must not warn."""
+    import warnings
+
+    from data_engineer_project_weather_analytics_spark.plans import hints
+    from data_engineer_project_weather_analytics_spark.plans.registry import REGISTRY
+    from data_engineer_project_weather_analytics_spark.sources.catalog import load_table
+
+    dim = load_table(spark, SF_DIR, "customer")
+    jlang = spark._jvm.java.lang
+    for fail in (
+        lambda _df: jlang.Integer.parseInt("x"),
+        lambda _df: jlang.Class.forName("no.such.StatsClass"),
+    ):
+        monkeypatch.setattr(hints, "estimated_size_bytes", fail)
+        with pytest.warns(RuntimeWarning, match="broadcast hint dropped"):
+            out = hints.maybe_broadcast(dim, threshold_bytes=1 << 40)
+        assert out is dim
+    monkeypatch.undo()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        REGISTRY["a5_latest_join_dim"].fn(spark, SF_DIR)
+
+
 def test_embedding_lsh_bucket_cap_precedes_pair_join(spark):
     """embedding_neardup_lsh must drop over-cap buckets BEFORE the
     within-bucket self-join: 300 identical vectors collapse into one
@@ -929,13 +957,13 @@ def test_two_level_kmeans_fine_codebook_shards_past_broadcast_ceiling(spark):
     from data_engineer_project_weather_analytics_spark.sources.catalog import load_table
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    sharded = similarity.kmeans_assign_two_level(
-        emb, "vec_id", "embedding", k=32, broadcast_fine=False
+    sharded = similarity.kmeans_assign(
+        emb, "vec_id", "embedding", k=32, two_level=True, broadcast_fine=False
     )
     plan = sharded._jdf.queryExecution().sparkPlan().toString()
     assert "ShuffledHashJoin" in plan, plan
-    bcast = similarity.kmeans_assign_two_level(
-        emb, "vec_id", "embedding", k=32, broadcast_fine=True
+    bcast = similarity.kmeans_assign(
+        emb, "vec_id", "embedding", k=32, two_level=True, broadcast_fine=True
     )
     plan_b = bcast._jdf.queryExecution().sparkPlan().toString()
     assert "ShuffledHashJoin" not in plan_b and "BroadcastHashJoin" in plan_b, plan_b
@@ -957,8 +985,8 @@ def test_two_level_kmeans_agrees_with_flat_when_one_coarse_cell(spark):
 
     emb = load_table(spark, SF_DIR, "embeddings")
     flat = similarity.kmeans_assign(emb, "vec_id", "embedding", k=8)
-    two = similarity.kmeans_assign_two_level(
-        emb, "vec_id", "embedding", k=8, coarse_k=1
+    two = similarity.kmeans_assign(
+        emb, "vec_id", "embedding", k=8, two_level=True, coarse_k=1
     )
     h = lambda df: df.select(  # noqa: E731
         F.bit_xor(F.xxhash64("vec_id", "cluster_id", "sim"))

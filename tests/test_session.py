@@ -27,3 +27,24 @@ def test_configure_warns_on_rejected_conf_and_applies_the_rest(spark, monkeypatc
         assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def test_ship_package_failure_warns_and_leaves_session_unshipped(spark, monkeypatch):
+    """A failed package zip must raise a ``RuntimeWarning`` and leave the
+    shipped flag unset, so a later configure retries instead of
+    silently running workers without the package."""
+    import zipfile
+
+    sc = spark.sparkContext
+    monkeypatch.setattr(
+        sc, "_data_engineer_project_weather_analytics_spark_shipped", False,
+        raising=False,
+    )
+
+    def _fail(*_a, **_kw):
+        raise OSError("no space left on device")
+
+    monkeypatch.setattr(zipfile, "ZipFile", _fail)
+    with pytest.warns(RuntimeWarning, match="could not ship the package"):
+        session._ship_package(spark)
+    assert not sc._data_engineer_project_weather_analytics_spark_shipped

@@ -976,20 +976,18 @@ def test_with_cell_assignment_matches_batch(spark):
     schema = "vec_id long, embedding array<double>"
     corpus_df = spark.createDataFrame(corpus, schema)
     all_df = spark.createDataFrame(corpus + batch, schema)
-    _, cents = similarity._kmeans_fit(
+    _, codebook = similarity._kmeans_fit(
         corpus_df.selectExpr("vec_id AS __vid", "embedding AS __v"), 8, 3
     )
-    centroids = [
-        (r["cell"], list(r["centroid"])) for r in cents.collect()
-    ]
     got = {
         r["vec_id"]: r["cell"]
-        for r in with_cell_assignment(all_df, "embedding", centroids).collect()
+        for r in with_cell_assignment(all_df, "embedding", codebook).collect()
     }
     want = {
         r["__vid"]: r["cell"]
         for r in similarity._batch_assign(
-            all_df.selectExpr("vec_id AS __vid", "embedding AS __v"), cents
+            all_df.selectExpr("vec_id AS __vid", "embedding AS __v"),
+            codebook["cents"],
         ).collect()
     }
     assert got == want
@@ -1014,9 +1012,6 @@ def test_streaming_semdedup_probe_equals_batch_x54(spark, tmp_path):
     survivors, codebook = similarity.semdedup_corpus_index(
         corpus_df, "vec_id", "embedding", k=8
     )
-    centroids = [
-        (r["cell"], list(r["centroid"])) for r in codebook["cents"].collect()
-    ]
     seed_rows = [
         (r["corpus_id"], list(r["__cv"])) for r in survivors.collect()
     ]
@@ -1048,7 +1043,7 @@ def test_streaming_semdedup_probe_equals_batch_x54(spark, tmp_path):
         )
         q = (
             streaming_semdedup_probe(
-                stream, "vec_id", "embedding", centroids, seed_col="is_seed"
+                stream, "vec_id", "embedding", codebook, seed_col="is_seed"
             )
             .writeStream.foreachBatch(_sink)
             .option("checkpointLocation", ckpt)
@@ -1118,14 +1113,9 @@ def test_streaming_semdedup_stored_probe_equals_batch_x54c(spark, tmp_path):
         corpus_df, "vec_id", "embedding", idx, k=None, two_level=True
     )
     survivors = spark.read.parquet(f"{idx}/survivors")
-    fmap_rows = [
-        (r["cell"], list(r["centroid"]), r["coarse"])
-        for r in spark.read.parquet(f"{idx}/fmap").collect()
-    ]
-    occ_rows = [
-        (r["coarse"], list(r["ccent"]))
-        for r in spark.read.parquet(f"{idx}/occ").collect()
-    ]
+    codebook = {
+        name: spark.read.parquet(f"{idx}/{name}") for name in ("fmap", "occ")
+    }
     seed_rows = [
         (r["corpus_id"], list(r["__cv"])) for r in survivors.collect()
     ]
@@ -1150,7 +1140,7 @@ def test_streaming_semdedup_stored_probe_equals_batch_x54c(spark, tmp_path):
     q = (
         streaming_semdedup_probe(
             stream, "vec_id", "embedding",
-            seed_col="is_seed", fmap_rows=fmap_rows, occ_rows=occ_rows,
+            codebook, seed_col="is_seed",
         )
         .writeStream.foreachBatch(_sink)
         .option("checkpointLocation", ckpt)
@@ -1228,7 +1218,10 @@ def test_streaming_semdedup_saturation_keeps_deciding(spark, tmp_path):
 
     q = (
         streaming_semdedup_probe(
-            stream, "vec_id", "embedding", [(1, u)],
+            stream, "vec_id", "embedding",
+            {"cents": spark.createDataFrame(
+                [(1, u)], "cell int, centroid array<double>"
+            )},
             max_cell=5, seed_col="is_seed",
         )
         .writeStream.foreachBatch(_sink)
@@ -1299,9 +1292,6 @@ def test_streaming_ingest_verdict_equals_batch_x59(spark, tmp_path):
         emb.filter(esplit == "train"), "vec_id", "embedding",
         similarity.KMEANS_K, similarity.KMEANS_ITERS, 0.8,
     )
-    centroids = [
-        (r["cell"], list(r["centroid"])) for r in codebook["cents"].collect()
-    ]
     seed_rows = [(r["corpus_id"], list(r["__cv"])) for r in survivors.collect()]
     probe_rows = [
         (r["vec_id"], [float(x) for x in r["embedding"]])
@@ -1324,7 +1314,7 @@ def test_streaming_ingest_verdict_equals_batch_x59(spark, tmp_path):
             spark.readStream.schema(EMB_SCHEMA)
             .option("maxFilesPerTrigger", 1)
             .parquet(esrc),
-            "vec_id", "embedding", centroids, seed_col="is_seed",
+            "vec_id", "embedding", codebook, seed_col="is_seed",
         )
         .writeStream.foreachBatch(_esink)
         .option("checkpointLocation", eckpt)
