@@ -25,7 +25,8 @@ while ``notebook/WeatherProject.ipynb:682-687`` inserts-if-absent
 
 from __future__ import annotations
 
-from collections.abc import Iterable
+from collections.abc import Callable, Iterable
+from functools import reduce
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -145,19 +146,18 @@ def etl_final_state(
     regardless of round count.  An unknown ``cities_mode`` raises
     ``ValueError``, as in :func:`run_etl`."""
     views = _views(cities_mode)
-    cities_batches = []
-    fact_batches = []
-    for seq, raw in enumerate(rounds):
-        flat = parse_current(raw)
-        cities_batches.append(stamp_batch(to_cities_dim(flat), seq))
-        fact_batches.append(stamp_batch(to_current_weather_fact(flat), seq))
-    cities_all = cities_batches[0]
-    for b in cities_batches[1:]:
-        cities_all = cities_all.unionByName(b)
-    fact_all = fact_batches[0]
-    for b in fact_batches[1:]:
-        fact_all = fact_all.unionByName(b)
-    cities, fact = views(cities_all, ["city_id"], fact_all, ["city_id", "dt"])
+    flats = [parse_current(raw) for raw in rounds]
+
+    def stamped(table: Callable[[DataFrame], DataFrame]) -> DataFrame:
+        return reduce(
+            DataFrame.unionByName,
+            (stamp_batch(table(flat), seq) for seq, flat in enumerate(flats)),
+        )
+
+    cities, fact = views(
+        stamped(to_cities_dim), ["city_id"],
+        stamped(to_current_weather_fact), ["city_id", "dt"],
+    )
     return fact.join(F.broadcast(cities), "city_id")
 
 

@@ -22,6 +22,8 @@ collision) = Jaccard similarity, banding boosts recall.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -48,25 +50,32 @@ def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return df.join(w_min, on=id_col, how="left_semi")
 
 
-def shingles(text_col: str, n: int = 3) -> F.Column:
-    """Word n-gram shingles as an array column (empty if < n tokens).
+def _ngrams_sql(
+    toks: str,
+    n: int,
+    *,
+    gram: Callable[[str], str] = lambda g: g,
+    elem_type: str = "STRING",
+    distinct: bool = False,
+) -> str:
+    """SQL for the word n-grams of the token-array column ``toks`` —
+    the one n-gram definition of the near-dup family (shingles, hashed
+    shingle sets, streaming band signatures, x43 spans).
 
-    Pure higher-order-function expression — no explode yet, so the
-    projection stays narrow until the caller decides to unnest.
-
-    NOTE: evaluates ``split()`` inside the per-shingle lambda —
-    O(tokens²) per document.  Fine for ad-hoc use on short text;
-    :func:`doc_shingles` is the corpus-scale form (tokenize once
-    behind a projection boundary, then slice the materialized array)."""
-    return F.expr(
-        f"""
-        CASE WHEN size(split({text_col}, ' ')) >= {n}
-             THEN transform(
-                    sequence(0, size(split({text_col}, ' ')) - {n}),
-                    i -> array_join(slice(split({text_col}, ' '), i + 1, {n}), ' '))
-             ELSE CAST(array() AS ARRAY<STRING>)
-        END
-        """
+    Each gram is ``gram(<the n tokens joined by ' '>)`` (the joined
+    string itself by default; pass ``elem_type`` when ``gram`` changes
+    the type).  A document of fewer than ``n`` tokens has no gram: an
+    empty ``ARRAY<elem_type>``.  ``distinct`` dedups the grams inside
+    the non-empty branch.  ``toks`` must be a materialized column
+    (tokenize ONCE behind a projection boundary): slicing an inline
+    ``split()`` would re-split the document per gram, O(tokens²)."""
+    joined = f"array_join(slice({toks}, i + 1, {n}), ' ')"
+    grams = f"transform(sequence(0, size({toks}) - {n}), i -> {gram(joined)})"
+    if distinct:
+        grams = f"array_distinct({grams})"
+    return (
+        f"CASE WHEN size({toks}) >= {n} THEN {grams} "
+        f"ELSE CAST(array() AS ARRAY<{elem_type}>) END"
     )
 
 
@@ -86,19 +95,11 @@ def doc_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataF
       saves a full shuffle of ~|docs|×|shingles| rows.  Output is
       identical because shingle sets never cross documents."""
     toks = df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("__toks"))
-    sh = F.expr(
-        f"""
-        CASE WHEN size(__toks) >= {n}
-             THEN transform(
-                    sequence(0, size(__toks) - {n}),
-                    i -> array_join(slice(__toks, i + 1, {n}), ' '))
-             ELSE CAST(array() AS ARRAY<STRING>)
-        END
-        """
-    )
     return toks.select(
         F.col(id_col),
-        F.explode(F.array_distinct(sh)).alias("shingle"),
+        F.explode(F.array_distinct(F.expr(_ngrams_sql("__toks", n)))).alias(
+            "shingle"
+        ),
     )
 
 
@@ -117,6 +118,11 @@ def shingle_hash64(col: F.Column | str) -> F.Column:
     return F.conv(F.substring(F.md5(c), 1, SHINGLE_HASH_HEX), 16, 10).cast(
         "bigint"
     )
+
+
+def _hash64_sql(expr: str) -> str:
+    """:func:`shingle_hash64` of the SQL expression ``expr``."""
+    return f"CAST(conv(substr(md5({expr}), 1, {SHINGLE_HASH_HEX}), 16, 10) AS BIGINT)"
 
 
 def doc_shingle_hash_sets(
@@ -148,16 +154,7 @@ def doc_shingle_hash_sets(
     exactly as the oracle's ``list(DISTINCT ...)`` does)."""
     toks = df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("__toks"))
     sh = F.expr(
-        f"""
-        CASE WHEN size(__toks) >= {n}
-             THEN array_distinct(transform(
-                    sequence(0, size(__toks) - {n}),
-                    i -> CAST(conv(substr(md5(
-                            array_join(slice(__toks, i + 1, {n}), ' ')),
-                            1, {SHINGLE_HASH_HEX}), 16, 10) AS BIGINT)))
-             ELSE CAST(array() AS ARRAY<BIGINT>)
-        END
-        """
+        _ngrams_sql("__toks", n, gram=_hash64_sql, elem_type="BIGINT", distinct=True)
     )
     return toks.select(F.col(id_col), sh.alias("sh_set")).withColumn(
         "set_size", F.size("sh_set")
@@ -210,15 +207,9 @@ def jaccard_for_candidates_packed(
             "size_b",
         )
     )
-    return scored.select(
-        "id_a",
-        "id_b",
-        # unrounded (exact-int inputs → bit-identical division)
-        (
-            F.col("n_inter").cast("double")
-            / (F.col("size_a") + F.col("size_b") - F.col("n_inter"))
-        ).alias("jaccard"),
-    ).filter(F.col("jaccard") >= threshold)
+    return scored.select("id_a", "id_b", _jaccard()).filter(
+        F.col("jaccard") >= threshold
+    )
 
 
 def minhash_signatures(
@@ -246,6 +237,24 @@ def minhash_signatures(
     return minhash_with_sizes(ds, id_col, n_bands)[0]
 
 
+def _band_digest_sql(shingle: str, n_bands: int) -> str:
+    """SQL for the band digest of ``shingle``: ``ceil(n_bands/4)``
+    salted md5s (salt ``'#' * i``) concatenated — each md5 is 32 hex
+    chars, i.e. four 8-hex band slices (:func:`_band_slice_sql`).  The
+    one construction behind the batch signatures
+    (:func:`minhash_with_sizes`) and the streaming per-row bands
+    (``streaming.stateful.with_minhash_bands``)."""
+    return " || ".join(
+        f"md5(concat({shingle}, '{'#' * i}'))" for i in range((n_bands + 3) // 4)
+    )
+
+
+def _band_slice_sql(digest: str, band: int) -> str:
+    """SQL for band ``band``'s 32-bit hash: its 8-hex slice of a
+    :func:`_band_digest_sql` digest."""
+    return f"substring({digest}, {8 * band + 1}, 8)"
+
+
 def minhash_with_sizes(
     ds: DataFrame, id_col: str, n_bands: int = 8
 ) -> tuple[DataFrame, DataFrame]:
@@ -257,15 +266,9 @@ def minhash_with_sizes(
     shares the (id-keyed) exchange between the two consumers.  At
     corpus scale this removes an entire scan+shuffle of the exploded
     shingle table from the near-dup pipeline."""
-    n_digests = (n_bands + 3) // 4
-    digest = F.concat(
-        *[
-            F.md5(F.concat(F.col("shingle"), F.lit("#" * i)))
-            for i in range(n_digests)
-        ]
-    )
+    digest = _band_digest_sql("shingle", n_bands)
     mins = [
-        F.min(F.substring(digest, 8 * b + 1, 8)).alias(f"__mh{b}")
+        F.min(F.expr(_band_slice_sql(digest, b))).alias(f"__mh{b}")
         for b in range(n_bands)
     ]
     agg = ds.groupBy(id_col).agg(*mins, F.count(F.lit(1)).alias("set_size"))
@@ -278,20 +281,23 @@ def minhash_with_sizes(
     return sigs, sizes
 
 
-def _cap_buckets(signatures: DataFrame, max_bucket: int | None) -> DataFrame:
-    """Keep only the signature rows of buckets whose width (row count
-    per ``(band, minhash)``) lies in ``[2, max_bucket]`` — the
-    pre-counted cap of :func:`lsh_candidate_pairs` and
-    :func:`lsh_candidate_pairs_cross`; ``None`` keeps every row."""
+def _cap_buckets(
+    rows: DataFrame, max_bucket: int | None, keys: list[str]
+) -> DataFrame:
+    """Keep only the ``rows`` of buckets whose width (row count per
+    ``keys``) lies in ``[2, max_bucket]`` — the pre-counted hot-bucket
+    cap of :func:`lsh_candidate_pairs`, :func:`lsh_candidate_pairs_cross`
+    (keys ``band, minhash``) and ``similarity.embedding_lsh_candidates``
+    (keys ``__tbl, __bkt``); ``None`` keeps every row."""
     if max_bucket is None:
-        return signatures
+        return rows
     kept = (
-        signatures.groupBy("band", "minhash")
+        rows.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("__width"))
         .filter((F.col("__width") >= 2) & (F.col("__width") <= max_bucket))
-        .select("band", "minhash")
+        .select(*keys)
     )
-    return signatures.join(kept, ["band", "minhash"], "left_semi")
+    return rows.join(kept, keys, "left_semi")
 
 
 def lsh_candidate_pairs(
@@ -325,7 +331,7 @@ def lsh_candidate_pairs(
     identical by construction, so results match the uncapped-then-
     filtered formulation exactly.  (Width = row count: upstream
     :func:`minhash_signatures` emits exactly one row per (doc, band).)"""
-    signatures = _cap_buckets(signatures, max_bucket)
+    signatures = _cap_buckets(signatures, max_bucket, ["band", "minhash"])
     buckets = (
         signatures.groupBy("band", "minhash")
         .agg(F.sort_array(F.collect_set(F.col(id_col))).alias("ids"))
@@ -367,7 +373,7 @@ def lsh_candidate_pairs_cross(
     ``side_col`` must be 'train' (corpus) / 'test' (batch) per row
     (:func:`..text.deterministic_split` shape).  Output:
     ``(id_a ∈ corpus, id_b ∈ batch)``, distinct."""
-    signatures = _cap_buckets(signatures, max_bucket)
+    signatures = _cap_buckets(signatures, max_bucket, ["band", "minhash"])
     buckets = (
         signatures.groupBy("band", "minhash")
         .agg(
@@ -397,6 +403,48 @@ def lsh_candidate_pairs_cross(
     )
 
 
+def _jaccard() -> F.Column:
+    """``jaccard`` = |A∩B| / |A∪B| from ``n_inter``, ``size_a`` and
+    ``size_b``.  Unrounded: the inputs are exact ints, so the double
+    division is bit-identical in any engine; round() is NOT (Spark
+    rounds the shortest decimal string, DuckDB the binary value)."""
+    return (
+        F.col("n_inter").cast("double")
+        / (F.col("size_a") + F.col("size_b") - F.col("n_inter"))
+    ).alias("jaccard")
+
+
+def _intersections(
+    ds: DataFrame,
+    id_col: str,
+    candidates: DataFrame | None = None,
+    sizes: DataFrame | None = None,
+) -> DataFrame:
+    """Shingle-intersection counts ``(id_a, id_b, n_inter, size_a,
+    size_b)`` over the exploded shingle table ``ds``: for every
+    ``candidates`` pair (shingles joined THROUGH the pair table), or,
+    with no candidates, for every ``id_a < id_b`` pair sharing a
+    shingle (the shingle self-join).  Pairs sharing no shingle have no
+    row.  ``sizes`` (``(id, set_size)``) defaults to a count over
+    ``ds``."""
+    if sizes is None:
+        sizes = ds.groupBy(id_col).agg(F.count(F.lit(1)).alias("set_size"))
+    a = ds.select(F.col(id_col).alias("id_a"), "shingle")
+    b = ds.select(F.col(id_col).alias("id_b"), "shingle")
+    if candidates is None:
+        shared = a.join(b, on="shingle").filter(F.col("id_a") < F.col("id_b"))
+    else:
+        shared = (
+            candidates.select("id_a", "id_b")
+            .join(a, "id_a")
+            .join(b, ["id_b", "shingle"])
+        )
+    inter = shared.groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("n_inter"))
+    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("set_size").alias("size_a"))
+    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("set_size").alias("size_b"))
+    return inter.join(sa, "id_a").join(sb, "id_b")
+
+
 def jaccard_for_candidates(
     ds: DataFrame,
     id_col: str,
@@ -422,31 +470,9 @@ def jaccard_for_candidates(
     Pass ``sizes`` (``(id, set_size)``, e.g. from
     :func:`minhash_with_sizes`) to reuse an already-computed set-size
     table instead of re-scanning ``ds``."""
-    if sizes is None:
-        sizes = ds.groupBy(id_col).agg(F.count(F.lit(1)).alias("set_size"))
-    a = ds.select(F.col(id_col).alias("id_a"), "shingle")
-    b = ds.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        candidates.select("id_a", "id_b")
-        .join(a, "id_a")
-        .join(b, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("set_size").alias("size_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("set_size").alias("size_b"))
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            # unrounded (exact-int inputs → bit-identical division)
-            (
-                F.col("n_inter").cast("double")
-                / (F.col("size_a") + F.col("size_b") - F.col("n_inter"))
-            ).alias("jaccard"),
-        )
+        _intersections(ds, id_col, candidates, sizes)
+        .select("id_a", "id_b", _jaccard())
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -472,22 +498,8 @@ def containment_for_candidates(
     direction reaches ``threshold``.  Both divisions are single
     float ops over exact int64 counts (bit-identical cross-engine).
     """
-    if sizes is None:
-        sizes = ds.groupBy(id_col).agg(F.count(F.lit(1)).alias("set_size"))
-    a = ds.select(F.col(id_col).alias("id_a"), "shingle")
-    b = ds.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        candidates.select("id_a", "id_b")
-        .join(a, "id_a")
-        .join(b, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("set_size").alias("size_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("set_size").alias("size_b"))
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
+        _intersections(ds, id_col, candidates, sizes)
         .select(
             "id_a",
             "id_b",
@@ -652,31 +664,9 @@ def jaccard_pairs(
     already sub-quadratic), then |∩| vs set sizes.  At corpus scale
     you run this only on LSH candidates; standalone it is the
     ground-truth oracle."""
-    sizes = ds.groupBy(id_col).agg(F.count(F.lit(1)).alias("set_size"))
-    a = ds.select(F.col(id_col).alias("id_a"), "shingle")
-    b = ds.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        a.join(b, on="shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("set_size").alias("size_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("set_size").alias("size_b"))
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            # unrounded: inputs are exact ints, so the double division is
-            # bit-identical in any engine; round() is NOT (Spark rounds
-            # the shortest decimal string, DuckDB the binary value)
-            (
-                F.col("n_inter").cast("double")
-                / (F.col("size_a") + F.col("size_b") - F.col("n_inter"))
-            ).alias("jaccard"),
-        )
+        _intersections(ds, id_col)
+        .select("id_a", "id_b", _jaccard())
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -787,6 +777,34 @@ def lsh_probe_stored(
     )
 
 
+def _hashed_shingles(
+    docs: DataFrame, id_col: str, text_col: str, n: int
+) -> DataFrame:
+    """``(id, sh)``: each doc's distinct shingles as portable md5-int64
+    hashes (``SHINGLE_HASH_HEX``) — the stream both decontamination
+    directions match."""
+    return doc_shingles(docs, id_col, text_col, n=n).select(
+        F.col(id_col), shingle_hash64("shingle").alias("sh")
+    )
+
+
+def _hit_counts(doc_sh: DataFrame, hit_sh: DataFrame, id_col: str) -> DataFrame:
+    """Per-doc ``(id, n_shingles, n_hit)``: how many of each doc's
+    hashed shingles (``doc_sh``, :func:`_hashed_shingles`) occur in
+    ``hit_sh`` (an ``sh`` column, deduped here and broadcast — the
+    caller guarantees it is eval-sized).  One left join, one
+    map-side-combinable aggregate."""
+    hits = F.broadcast(hit_sh.distinct().withColumn("__hit", F.lit(1)))
+    return (
+        doc_sh.join(hits, "sh", "left")
+        .groupBy(id_col)
+        .agg(
+            F.count(F.lit(1)).alias("n_shingles"),
+            F.sum(F.coalesce("__hit", F.lit(0))).cast("bigint").alias("n_hit"),
+        )
+    )
+
+
 def decontamination_scan(
     train: DataFrame,
     eval_docs: DataFrame,
@@ -811,24 +829,9 @@ def decontamination_scan(
     shingle stream.  Portable md5-int64 shingle hashes
     (``SHINGLE_HASH_HEX``): any collision is SHARED with the DuckDB
     oracle, so the check can never drift."""
-    tsh = doc_shingles(train, id_col, text_col, n=n).select(
-        F.col(id_col), shingle_hash64("shingle").alias("sh")
-    )
-    esh = (
-        doc_shingles(eval_docs, id_col, text_col, n=n)
-        .select(shingle_hash64("shingle").alias("sh"))
-        .distinct()
-        .withColumn("__hit", F.lit(1))
-    )
+    esh = _hashed_shingles(eval_docs, id_col, text_col, n).select("sh")
     return (
-        tsh.join(F.broadcast(esh), "sh", "left")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_shingles"),
-            F.sum(F.coalesce("__hit", F.lit(0))).cast("bigint").alias(
-                "n_hit"
-            ),
-        )
+        _hit_counts(_hashed_shingles(train, id_col, text_col, n), esh, id_col)
         .filter(F.col("n_hit") > 0)
         .select(
             F.col(id_col).alias("train_doc_id"),
@@ -864,26 +867,15 @@ def decontamination_eval_coverage(
     then the per-eval-doc arithmetic runs entirely on eval-sized
     tables.  No corpus-wide distinct, no shuffle of the train shingle
     stream."""
-    esh_docs = doc_shingles(eval_docs, id_col, text_col, n=n).select(
-        F.col(id_col), shingle_hash64("shingle").alias("sh")
-    )
+    esh_docs = _hashed_shingles(eval_docs, id_col, text_col, n)
     eset = esh_docs.select("sh").distinct()
     hits = (
-        doc_shingles(train, id_col, text_col, n=n)
-        .select(shingle_hash64("shingle").alias("sh"))
+        _hashed_shingles(train, id_col, text_col, n)
+        .select("sh")
         .join(F.broadcast(eset), "sh", "left_semi")
-        .distinct()
-        .withColumn("__hit", F.lit(1))
     )
     return (
-        esh_docs.join(F.broadcast(hits), "sh", "left")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_shingles"),
-            F.sum(F.coalesce("__hit", F.lit(0))).cast("bigint").alias(
-                "n_hit"
-            ),
-        )
+        _hit_counts(esh_docs, hits, id_col)
         .select(
             F.col(id_col).alias("eval_doc_id"),
             "n_shingles",

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_engineer_project_weather_analytics_spark.operators import index_store
+from data_engineer_project_weather_analytics_spark.operators.dedup import _cap_buckets
 
 
 class SemDedupScaleWarning(UserWarning):
@@ -1406,14 +1407,7 @@ def embedding_lsh_candidates(
     ).select(
         "__vid", F.col("__b.tbl").alias("__tbl"), F.col("__b.bkt").alias("__bkt")
     )
-    if max_bucket is not None:
-        kept = (
-            tagged.groupBy("__tbl", "__bkt")
-            .agg(F.count(F.lit(1)).alias("__width"))
-            .filter((F.col("__width") >= 2) & (F.col("__width") <= max_bucket))
-            .select("__tbl", "__bkt")
-        )
-        tagged = tagged.join(kept, ["__tbl", "__bkt"], "left_semi")
+    tagged = _cap_buckets(tagged, max_bucket, ["__tbl", "__bkt"])
     a = tagged.select(
         F.col("__vid").alias("id_a"), "__tbl", "__bkt"
     )
@@ -1457,8 +1451,8 @@ def embedding_neardup_lsh(
     * ``max_bucket`` drops degenerate hot buckets (identical or
       near-zero vectors collapsing into one sign pattern) BEFORE the
       pair self-join — widths are pre-counted and over-cap buckets
-      semi-joined away, the same pre-cap shape as the MinHash path
-      (operators/dedup.py), so no reducer ever sees the O(width²)
+      semi-joined away by the MinHash path's own cap
+      (``dedup._cap_buckets``), so no reducer ever sees the O(width²)
       pair blow-up.  Vectors that bucket-collide that hard are exact
       dups better handled by exact dedup first.
 

@@ -1619,16 +1619,7 @@ def x43_duplicate_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.split("text", " ").alias("__toks"))
-    span = F.expr(
-        f"""
-        CASE WHEN size(__toks) >= {_SPAN_N}
-             THEN transform(
-                    sequence(0, size(__toks) - {_SPAN_N}),
-                    i -> array_join(slice(__toks, i + 1, {_SPAN_N}), ' '))
-             ELSE CAST(array() AS ARRAY<STRING>)
-        END
-        """
-    )
+    span = F.expr(dedup._ngrams_sql("__toks", _SPAN_N))
     spans = toks.select("doc_id", F.explode(span).alias("span"))
     occ = spans.groupBy("span", "doc_id").agg(
         F.count(F.lit(1)).alias("n_occ")

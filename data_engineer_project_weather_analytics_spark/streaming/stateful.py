@@ -35,6 +35,12 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from data_engineer_project_weather_analytics_spark.operators.dedup import (
+    _band_digest_sql,
+    _band_slice_sql,
+    _ngrams_sql,
+)
+
 STATE_SCHEMA = StructType(
     [
         StructField("latest_ts", TimestampType()),
@@ -125,16 +131,17 @@ def with_minhash_bands(
     text_col: str,
     n_bands: int = 8,
     shingle_n: int = 3,
-    bands_col: str = "bands",
 ) -> DataFrame:
-    """Per-ROW band signatures — `(id, array<struct<band,minhash>>)` —
-    with NO aggregation, so the projection composes with a streaming
-    source (the batch pipeline's groupBy formulation is a shuffle the
-    stateful stage below must not be preceded by).
+    """Per-ROW band signatures — a ``bands`` column of
+    ``array<struct<band,minhash>>`` — with NO aggregation, so the
+    projection composes with a streaming source (the batch pipeline's
+    groupBy formulation is a shuffle the stateful stage below must not
+    be preceded by).
 
-    Same construction as the batch
-    :func:`~data_engineer_project_weather_analytics_spark.operators.dedup.minhash_with_sizes`
-    (md5-slicing: each salted md5 yields four 32-bit band slices), and
+    Same n-grams (``dedup._ngrams_sql``) and the same band digest
+    (``dedup._band_digest_sql``/``_band_slice_sql``: each salted md5
+    yields four 32-bit band slices) as the batch
+    :func:`~data_engineer_project_weather_analytics_spark.operators.dedup.minhash_with_sizes`, and
     the same two scale shapes as ``doc_shingles``: tokenize ONCE and
     compute the ``ceil(n_bands/4)`` digests ONCE per shingle behind
     projection boundaries — a naive inline form recomputes split() and
@@ -142,34 +149,27 @@ def with_minhash_bands(
     an empty band array (no signature, never a candidate) — same
     convention as the batch shingle pipeline.
     """
-    n_digests = (n_bands + 3) // 4
-    digest_exprs = " || ".join(
-        f"md5(concat(s, '{'#' * i}'))" for i in range(n_digests)
-    )
-    sh_sql = f"""
-        CASE WHEN size(__toks) >= {shingle_n}
-             THEN array_distinct(transform(
-                    sequence(0, size(__toks) - {shingle_n}),
-                    i -> array_join(slice(__toks, i + 1, {shingle_n}), ' ')))
-             ELSE CAST(array() AS ARRAY<STRING>)
-        END
-    """
     # each withColumn is a projection whose output is referenced more
     # than once downstream, so CollapseProject keeps the boundary: the
     # token array, the shingle set, and the digest array are each
     # computed once per row
     digests = (
         df.withColumn("__toks", F.split(F.col(text_col), " "))
-        .withColumn("__sh", F.expr(sh_sql))
-        .withColumn("__digests", F.expr(f"transform(__sh, s -> {digest_exprs})"))
+        .withColumn(
+            "__sh", F.expr(_ngrams_sql("__toks", shingle_n, distinct=True))
+        )
+        .withColumn(
+            "__digests",
+            F.expr(f"transform(__sh, s -> {_band_digest_sql('s', n_bands)})"),
+        )
     )
     band_structs = ", ".join(
         f"named_struct('band', {b}, 'minhash', "
-        f"array_min(transform(__digests, d -> substring(d, {8 * b + 1}, 8))))"
+        f"array_min(transform(__digests, d -> {_band_slice_sql('d', b)})))"
         for b in range(n_bands)
     )
     return digests.withColumn(
-        bands_col,
+        "bands",
         F.expr(
             f"CASE WHEN size(__digests) > 0 THEN array({band_structs}) "
             f"ELSE CAST(array() AS ARRAY<STRUCT<band: INT, minhash: STRING>>) END"

@@ -12,7 +12,11 @@ from pyspark.sql import functions as F
 
 from data_engineer_project_weather_analytics_spark.operators import multimodal, similarity, text
 from data_engineer_project_weather_analytics_spark.operators.asof import asof_join_backward
-from data_engineer_project_weather_analytics_spark.operators.dedup import dedup_exact, shingles
+from data_engineer_project_weather_analytics_spark.operators.dedup import (
+    dedup_exact,
+    doc_shingle_hash_sets,
+    doc_shingles,
+)
 from data_engineer_project_weather_analytics_spark.operators.latest import latest_per_key
 from data_engineer_project_weather_analytics_spark.sources.catalog import load_table
 
@@ -57,10 +61,40 @@ def test_asof_backward_semantics(spark):
 
 
 def test_shingles_short_text_empty(spark):
-    df = spark.createDataFrame([Row(text="one two"), Row(text="a b c d")])
-    out = df.select(shingles("text", 3).alias("s")).collect()
-    assert out[0].s == []
-    assert out[1].s == ["a b c", "b c d"]
+    df = spark.createDataFrame(
+        [Row(doc_id=1, text="one two"), Row(doc_id=2, text="a b c d")]
+    )
+    out = doc_shingles(df, "doc_id", "text", 3).collect()
+    assert not [r for r in out if r.doc_id == 1]
+    assert sorted(r.shingle for r in out if r.doc_id == 2) == ["a b c", "b c d"]
+
+
+@pytest.mark.parametrize("n", [2, 3, 5])
+def test_ngram_boundary_shared_by_every_shingle_path(spark, n):
+    """A document of exactly ``n`` tokens has one n-gram and one of
+    ``n - 1`` tokens has none — the same boundary through the exploded
+    shingles, the hashed shingle sets and the streaming band
+    signatures, which all build their grams from ``_ngrams_sql``."""
+    from data_engineer_project_weather_analytics_spark.streaming.stateful import (
+        with_minhash_bands,
+    )
+
+    words = [f"w{i}" for i in range(n)]
+    df = spark.createDataFrame(
+        [Row(doc_id=1, text=" ".join(words)), Row(doc_id=2, text=" ".join(words[:-1]))]
+    )
+    sh = {r.doc_id: r.shingle for r in doc_shingles(df, "doc_id", "text", n).collect()}
+    assert sh == {1: " ".join(words)}
+    sets = {
+        r.doc_id: r.set_size
+        for r in doc_shingle_hash_sets(df, "doc_id", "text", n).collect()
+    }
+    assert sets == {1: 1, 2: 0}
+    bands = {
+        r.doc_id: len(r.bands)
+        for r in with_minhash_bands(df, "doc_id", "text", shingle_n=n).collect()
+    }
+    assert bands == {1: 8, 2: 0}
 
 
 def test_dedup_exact_keeps_lowest_id(spark):
