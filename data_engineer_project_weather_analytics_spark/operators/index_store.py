@@ -52,6 +52,11 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_engineer_project_weather_analytics_spark.sources.catalog import (
+    input_stamp,
+    read_parquet,
+)
+
 #: sidecar recording the row counts of the append-bearing artifacts at
 #: BUILD time — the baseline :func:`index_freshness` drifts against
 BASE_META = "_base_meta.json"
@@ -261,9 +266,10 @@ def write_index(
 def read_index(spark, index_dir: str, layout: dict[str, dict]) -> dict[str, DataFrame]:
     """The stored index as the same dict of named frames its build
     returned — one lazy parquet scan per artifact present on disk
-    (an index variant without ``centroids``, say, has no such key)."""
+    (an index variant without ``centroids``, say, has no such key),
+    each read through the schema memo of ``catalog.read_parquet``."""
     return {
-        name: spark.read.parquet(path)
+        name: read_parquet(spark, path)
         for name in layout
         if os.path.isdir(path := os.path.join(index_dir, name))
     }
@@ -370,15 +376,16 @@ def stored_index(
     when it is missing.
 
     The directory is keyed on what actually built it: the
-    ``(path, size, mtime_ns)`` of every input path, the build
-    ``params`` and :data:`INDEX_FORMAT_VERSION`.  A table regenerated at
-    the same path therefore gets a fresh index instead of silently
-    serving the old one, and a writer change ships with a version bump
-    instead of a hand-renamed directory.  Stale indexes are left in
-    place, never reused.  A ``build`` that raises leaves no live
-    directory (the staged residue is dropped by the next build)."""
-    stats = {p: os.stat(p) for p in inputs}
-    stamps = [(p, st.st_size, st.st_mtime_ns) for p, st in stats.items()]
+    :func:`~data_engineer_project_weather_analytics_spark.sources.catalog.input_stamp`
+    (``(path, size, mtime_ns)`` of every data file) of each distinct
+    input, the build ``params`` and :data:`INDEX_FORMAT_VERSION`.  A
+    table regenerated at the same path — or one part file rewritten
+    inside a directory input — therefore gets a fresh index instead of
+    silently serving the old one, and a writer change ships with a
+    version bump instead of a hand-renamed directory.  Stale indexes
+    are left in place, never reused.  A ``build`` that raises leaves no
+    live directory (the staged residue is dropped by the next build)."""
+    stamps = [s for p in dict.fromkeys(inputs) for s in input_stamp(p)]
     key = json.dumps(
         {"version": INDEX_FORMAT_VERSION, "inputs": stamps, "params": params},
         sort_keys=True,

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from data_engineer_project_weather_analytics_spark.operators import index_store
 from data_engineer_project_weather_analytics_spark.operators.dedup import _cap_buckets
+from data_engineer_project_weather_analytics_spark.sources.catalog import local_frame
 
 
 class SemDedupScaleWarning(UserWarning):
@@ -1810,8 +1811,8 @@ def ivfpq_recall_dial(
         ),
         queries, id_col, vec_col, dim=dim, m=m, n_probe_cells=max(nprobes),
     )
-    np_dim = vectors.sparkSession.createDataFrame(
-        [(n,) for n in nprobes], "nprobe int"
+    np_dim = local_frame(
+        vectors.sparkSession, [(n,) for n in nprobes], "nprobe int"
     )
     dial = scored.join(F.broadcast(np_dim), F.col("__r") <= F.col("nprobe"))
     w = Window.partitionBy("query_id", "nprobe").orderBy(
@@ -1959,9 +1960,7 @@ def reduced_recall_dial(
         vectors, id_col, vec_col,
         queries=vectors.filter(F.col(id_col) < n_queries), k=k,
     ).select("query_id", "neighbor_id")
-    methods = v.sparkSession.createDataFrame(
-        [("prefix",), ("rp",)], "method string"
-    )
+    methods = local_frame(v.sparkSession, [("prefix",), ("rp",)], "method string")
     return (
         exact.crossJoin(F.broadcast(methods))
         .join(approx, ["method", "query_id", "neighbor_id"], "left")
@@ -2069,8 +2068,8 @@ def sq8_recall_dial(
         vectors, id_col, vec_col,
         queries=vectors.filter(F.col(id_col) < n_queries), k=k,
     ).select("query_id", "neighbor_id")
-    methods = v.sparkSession.createDataFrame(
-        [("sq8",), ("sq8_rescore",)], "method string"
+    methods = local_frame(
+        v.sparkSession, [("sq8",), ("sq8_rescore",)], "method string"
     )
     return (
         exact.crossJoin(F.broadcast(methods))

@@ -28,7 +28,7 @@ from data_engineer_project_weather_analytics_spark.plans.oracles_extensions impo
     _SHINGLES,
     ORACLES_EXT,
 )
-from data_engineer_project_weather_analytics_spark.sources.catalog import load_table
+from data_engineer_project_weather_analytics_spark.sources.catalog import load_table, local_frame
 
 # 48-bit hash space: first 12 hex chars of md5.  2^48 fits int64 with
 # headroom for the (k-1)·2^48 estimator numerator (255·2^48 ≈ 7.2e16).
@@ -1743,8 +1743,8 @@ def x46_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     spec = F.broadcast(
-        spark.createDataFrame(
-            sorted(_MIX_RATES_BP.items()), "lang string, rate_bp int"
+        local_frame(
+            spark, sorted(_MIX_RATES_BP.items()), "lang string, rate_bp int"
         )
     )
     h = _h48(f"concat('{_MIX_SEED}:', CAST(doc_id AS STRING))")
@@ -1963,8 +1963,8 @@ def _ingest_curation(spark, sf_dir, sem_fn):
         F.col("best_sim").alias("__best_sim"),
     )
     spec = F.broadcast(
-        spark.createDataFrame(
-            sorted(_MIX_RATES_BP.items()), "lang string, rate_bp int"
+        local_frame(
+            spark, sorted(_MIX_RATES_BP.items()), "lang string, rate_bp int"
         )
     )
     j = (
@@ -2025,8 +2025,8 @@ def _curation_materialize(spark, sf_dir, sem_fn):
         F.col("retained_frac").alias("__rf"),
     )
     spec = F.broadcast(
-        spark.createDataFrame(
-            sorted(_MIX_RATES_BP.items()), "lang string, rate_bp int"
+        local_frame(
+            spark, sorted(_MIX_RATES_BP.items()), "lang string, rate_bp int"
         )
     )
     j = (

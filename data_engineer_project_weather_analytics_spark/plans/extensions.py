@@ -21,7 +21,7 @@ from data_engineer_project_weather_analytics_spark.operators import (
     text,
 )
 from data_engineer_project_weather_analytics_spark.plans.hints import maybe_broadcast
-from data_engineer_project_weather_analytics_spark.sources.catalog import load_table
+from data_engineer_project_weather_analytics_spark.sources.catalog import load_table, local_frame
 
 
 # --------------------------------------------------------------------------
@@ -726,7 +726,7 @@ PII_DOCS: tuple[tuple[int, str], ...] = (
 def x11_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrub over the fixture docs: redacted text + per-category
     hit counts (audit trail).  Chained regexp_replace in codegen."""
-    docs = spark.createDataFrame(list(PII_DOCS), "doc_id long, text string")
+    docs = local_frame(spark, PII_DOCS, "doc_id long, text string")
     return docs.select(
         "doc_id",
         text.redact_pii("text").alias("redacted"),
@@ -991,7 +991,7 @@ def x12_blocked_edit_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the blocking key is the only shuffle key and skewed blocks split
     under AQE (a hot block means a degenerate key — route through
     exact dedup first, as with LSH buckets)."""
-    docs = spark.createDataFrame(list(X12_TITLES), "id long, title string")
+    docs = local_frame(spark, X12_TITLES, "id long, title string")
     blocked = docs.select(
         "id", "title", F.expr("split_part(title, ' ', 1)").alias("block")
     )

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_engineer_project_weather_analytics_spark.operators.skew import replicated_skew_join
-from data_engineer_project_weather_analytics_spark.sources.catalog import load_table
+from data_engineer_project_weather_analytics_spark.sources.catalog import load_table, local_frame
 
 
 # --------------------------------------------------------------------------
@@ -93,7 +93,8 @@ def j7_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("__c"),
     )
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [("A", "accepted"), ("N", "none"), ("R", "returned")],
         "flag string, flag_label string",
     )

@@ -3,7 +3,7 @@
 The reference's actual ETL surface (JSON flatten P1/P2/P7/P8/P9,
 forecast explode P3/P4, dimension/fact split + dashboard join) run on
 **literal API-shaped documents** shared verbatim between the Spark
-side (``createDataFrame`` → ``from_json``) and the DuckDB oracle
+side (``catalog.local_frame`` → ``from_json``) and the DuckDB oracle
 (``VALUES`` → JSON operators), so the whole ingestion path is value-
 hash-checked by the driver, independent of the sf tables.
 
@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from data_engineer_project_weather_analytics_spark.etl import etl_final_state
 from data_engineer_project_weather_analytics_spark.operators.upsert import stamp_batch, upsert
+from data_engineer_project_weather_analytics_spark.sources.catalog import local_frame
 from data_engineer_project_weather_analytics_spark.sources.json_ingest import (
     parse_current,
     parse_forecast,
@@ -158,7 +159,7 @@ CURRENT_DOCS_R2: tuple[str, ...] = (
 
 
 def _raw(spark: SparkSession, docs: tuple[str, ...]) -> DataFrame:
-    return spark.createDataFrame([(d,) for d in docs], schema="payload string")
+    return local_frame(spark, [(d,) for d in docs], "payload string")
 
 
 def w_ingest_current(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -45,6 +45,54 @@ def default_fetch(city: str) -> str | None:
     )
 
 
+class _HttpFetcher:
+    """The callable :func:`http_fetch_fn` returns.  Pickles as its
+    config only: the ``requests.Session`` is built lazily on the first
+    call in whichever process runs it (a Spark worker), so one
+    partition's cities share one session and its connection pool."""
+
+    def __init__(self, base_url: str, timeout_s: float, fixed: dict[str, str]):
+        self.base_url = base_url
+        self.timeout_s = timeout_s
+        self.fixed = fixed
+        self._session = None
+
+    def __getstate__(self) -> dict:
+        return {**self.__dict__, "_session": None}
+
+    def _open(self):
+        """A session with the environment resolved once for the fixed
+        host — the proxies, CA bundle and netrc auth ``requests.get``
+        would otherwise re-read from the environment on every call —
+        and ``trust_env`` off so no request re-reads them."""
+        import requests
+        from requests.utils import get_netrc_auth
+
+        s = requests.Session()
+        env = s.merge_environment_settings(self.base_url, {}, None, None, None)
+        s.proxies.update(env["proxies"])
+        s.verify = env["verify"]
+        s.cert = env["cert"]
+        s.auth = get_netrc_auth(self.base_url)
+        s.trust_env = False
+        return s
+
+    def __call__(self, city: str) -> str | None:
+        try:
+            if self._session is None:
+                self._session = self._open()
+            r = self._session.get(
+                self.base_url, params={"q": city, **self.fixed}, timeout=self.timeout_s
+            )
+            r.raise_for_status()
+            data = r.json()
+            if int(data.get("cod", 0)) != 200:
+                return None
+            return r.text
+        except Exception:
+            return None
+
+
 def http_fetch_fn(
     base_url: str,
     api_key: str | None = None,
@@ -63,29 +111,15 @@ def http_fetch_fn(
     to sources/json_ingest.py where Spark's PERMISSIVE from_json does
     it engine-side, once, with a declared schema.
 
-    The callable closes over only picklable config, so mapInPandas
+    The callable pickles as picklable config only, so mapInPandas
     ships it to executors; each partition then fetches its slice of
-    the city list under the T3 throttle."""
-    import requests  # local: executors import lazily, tests may stub
+    the city list under the T3 throttle over one HTTP session."""
+    import requests  # noqa: F401 — a missing client fails here, not per city
 
     fixed = {"units": "metric", "lang": "vi", **(params or {})}
     if api_key is not None:
         fixed["appid"] = api_key
-
-    def fetch(city: str) -> str | None:
-        try:
-            r = requests.get(
-                base_url, params={"q": city, **fixed}, timeout=timeout_s
-            )
-            r.raise_for_status()
-            data = r.json()
-            if int(data.get("cod", 0)) != 200:
-                return None
-            return r.text
-        except Exception:
-            return None
-
-    return fetch
+    return _HttpFetcher(base_url, timeout_s, fixed)
 
 
 def fetch_payloads(

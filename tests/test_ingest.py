@@ -379,3 +379,26 @@ def test_rest_fetch_real_http_loopback(spark):
     finally:
         srv.shutdown()
         srv.server_close()
+
+
+def test_http_fetcher_reuses_one_session_and_never_pickles_it():
+    """The fetcher builds its ``requests.Session`` on the first call and
+    reuses it; pickling (mapInPandas shipping it to a worker) carries
+    the config only, so every worker opens its own session."""
+    import pickle
+
+    from pyspark import cloudpickle
+
+    from data_engineer_project_weather_analytics_spark.sources.rest import http_fetch_fn
+
+    # nothing listens on the discard port: the failure returns None
+    fetch = http_fetch_fn("http://127.0.0.1:9/data/2.5/weather", timeout_s=0.5)
+    assert fetch("Hanoi") is None
+    session = fetch._session
+    assert session is not None and not session.trust_env
+    assert fetch("Hue") is None and fetch._session is session
+    clone = pickle.loads(cloudpickle.dumps(fetch))
+    assert clone._session is None
+    assert (clone.base_url, clone.timeout_s, clone.fixed) == (
+        fetch.base_url, fetch.timeout_s, fetch.fixed,
+    )
